@@ -19,7 +19,7 @@ idle box) and `bench_anchor_all.json` (full registry, idle box,
 SPARK_GRAFT_BENCH_ALL=1): refresh = run on an idle box, then
 `cp bench_details[_all].json bench_anchor[_all].json` and commit. Plan
 regressions stay diffable round-over-round via
-`tools/bench_plan_diff.py <anchor> <fresh sidecar>`.
+`tools/plans.py diff <anchor> <fresh sidecar>`.
 
 Each query is forced end-to-end with the noop sink (full materialization,
 no collect/driver overhead). Each query runs once for warmup, then

@@ -67,11 +67,6 @@ def decode_audio(payload: bytes):  # pragma: no cover - documented stub
     raise NotImplementedError("audio decoding requires librosa (not installed)")
 
 
-def resize_image(payload: bytes, width: int, height: int):  # pragma: no cover
-    """Real image resize — requires PIL, not in this container."""
-    raise NotImplementedError("image resizing requires PIL (not installed)")
-
-
 def sample_frames(payload: bytes, every_n: int = 10):  # pragma: no cover
     raise NotImplementedError("video decoding requires pyav (not installed)")
 

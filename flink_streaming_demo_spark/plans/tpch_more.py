@@ -185,6 +185,9 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Adaptation: the reduced customer table has no address/phone/comment, so
     the output carries (custkey, name, nation, mktsegment, acctbal).
+    Revenue is summed as DECIMAL(28,8), exact and order-independent: a
+    double SUM can land on a half cent and round either way depending on
+    summation order.
     Scale: customer/nation broadcast; orderkey shuffle; top-20 via
     TakeOrdered (per-partition top-k), not a global sort.
     """
@@ -204,8 +207,14 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", "c_name", "c_acctbal", "n_name", "c_mktsegment"
     ).agg(
         F.round(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-        ).alias("revenue")
+            F.sum(
+                (F.col("l_extendedprice") * (1 - F.col("l_discount")))
+                .cast("decimal(28,8)")
+            ),
+            2,
+        )
+        .cast("double")
+        .alias("revenue")
     )
     return agg.orderBy(F.desc("revenue"), F.asc("c_custkey")).limit(20)
 
@@ -220,7 +229,8 @@ register(
         c_acctbal,
         n_name,
         c_mktsegment,
-        ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
+        CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount)
+                            AS DECIMAL(28,8))), 2) AS DOUBLE) AS revenue
     FROM lineitem
     JOIN orders ON l_orderkey = o_orderkey
     JOIN customer ON o_custkey = c_custkey

@@ -189,6 +189,9 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Profit on 'red' parts per supplier nation per order year.
 
     Adaptation: no ps_supplycost, so cost = 0.8 * p_retailprice * quantity.
+    Per-row profits are summed as DECIMAL(28,8), exact and
+    order-independent: a double SUM can land on a half cent and round
+    either way depending on summation order (as in Q11).
 
     Spark plan: part (filtered by name) and supplier/nation broadcast into
     the lineitem scan; the one big shuffle is lineitem joins orders on
@@ -212,11 +215,16 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.round(
                 F.sum(
-                    F.col("l_extendedprice") * (1 - F.col("l_discount"))
-                    - F.lit(0.8) * F.col("p_retailprice") * F.col("l_quantity")
+                    (
+                        F.col("l_extendedprice") * (1 - F.col("l_discount"))
+                        - F.lit(0.8) * F.col("p_retailprice")
+                        * F.col("l_quantity")
+                    ).cast("decimal(28,8)")
                 ),
                 2,
-            ).alias("sum_profit")
+            )
+            .cast("double")
+            .alias("sum_profit")
         )
         .orderBy("nation", F.desc("o_year"))
     )
@@ -228,8 +236,10 @@ register(
     """
     SELECT n_name AS nation,
            CAST(YEAR(o_orderdate) AS INT) AS o_year,
-           ROUND(SUM(l_extendedprice * (1 - l_discount)
-                     - 0.8 * p_retailprice * l_quantity), 2) AS sum_profit
+           CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount)
+                               - 0.8 * p_retailprice * l_quantity
+                               AS DECIMAL(28,8))), 2) AS DOUBLE)
+               AS sum_profit
     FROM lineitem
     JOIN part ON p_partkey = l_partkey
     JOIN supplier ON s_suppkey = l_suppkey

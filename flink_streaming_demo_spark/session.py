@@ -38,27 +38,19 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # Post-shuffle coalescing mode (r16, guide §2.2 + §1.2): r15
-        # shipped parallelismFirst=false (size-based coalescing, 64m
-        # advisory) as the default and the driver's bench regressed 15%
-        # — at sf0.1 every post-shuffle stage holds KBs, so AQE coalesced
-        # each one to ~1 task and the 32-core session lost all
-        # post-shuffle parallelism. An idle-box interleaved A/B this
-        # round (local[32], best-of-3, two pairs) measured false = 42.4 /
-        # 44.0 s vs true = 25.4 / 20.6 s headline total — ~2x. Default
-        # therefore reverts to Spark's own parallelismFirst=true; the
-        # size-based mode remains the documented CLUSTER override
-        # (SPARK_GRAFT_COALESCE_PARALLELISM_FIRST=false +
-        # SPARK_GRAFT_ADVISORY_PARTITION_SIZE=256m per guide §9) where
-        # post-shuffle partitions hold hundreds of MB, not KBs.
+        # Post-shuffle coalescing keeps Spark's parallelismFirst=true:
+        # at sf0.1 every post-shuffle stage holds KBs, so size-based
+        # coalescing (false, 64m advisory) squeezed each one to ~1 task
+        # and the 32-core session lost all post-shuffle parallelism. An
+        # idle-box interleaved A/B (local[32], best-of-3, two pairs)
+        # measured false = 42.4 / 44.0 s vs true = 25.4 / 20.6 s headline
+        # total — ~2x. On a cluster where post-shuffle partitions hold
+        # hundreds of MB, pass the size-based mode through ``extra_conf``
+        # (parallelismFirst=false, advisoryPartitionSizeInBytes=256m).
         .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_COALESCE_PARALLELISM_FIRST", "true"),
+            "spark.sql.adaptive.coalescePartitions.parallelismFirst", "true"
         )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION_SIZE", "64m"),
-        )
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.spill.compress", "true")

@@ -313,6 +313,33 @@ def write_foreach_batch_stream(stream: DataFrame, body, query_name: str):
     )
 
 
+def _require_sink(sink, who: str, name: str, key=None, readable=True):
+    """Wiring-time check of a maintainer's keyed upsert sink, so a bad
+    sink fails at pipeline construction rather than mid-stream on the
+    first non-empty batch. Every sink must expose ``.foreach_batch``; a
+    ``readable`` one (the body reads its state back) must also expose
+    ``.path`` and ``.read(spark)`` (ParquetUpsertSink). ``key``: the
+    exact ``key_cols`` the body's upsert relies on — a mis-keyed sink
+    would silently collapse distinct state rows into one. A sink MISSING
+    ``key_cols`` fails the key check; it never passes by default."""
+    need = ["foreach_batch"] + (["path", "read"] if readable else [])
+    if not all(hasattr(sink, a) for a in need):
+        kind = (
+            "a store-backed sink exposing .path and .read(spark) "
+            "(ParquetUpsertSink)"
+            if readable
+            else "a keyed upsert sink exposing .foreach_batch"
+        )
+        raise TypeError(
+            f"{who} needs {kind} for {name}; got {type(sink).__name__}"
+        )
+    if key is not None and getattr(sink, "key_cols", None) != key:
+        raise ValueError(
+            f"{who}: {name} key_cols must be {key}, got "
+            f"{getattr(sink, 'key_cols', None)}"
+        )
+
+
 def streaming_quality_scores(
     stream: DataFrame,
     weights: DataFrame,
@@ -419,21 +446,7 @@ def _streaming_sketch_maintenance(
     and marker atomically via a transactional table format). The
     idempotent sketches skip the guard: their replay safety is
     algebraic, with no window at all."""
-    if not (hasattr(sink, "path") and hasattr(sink, "read")):
-        raise TypeError(
-            f"{sketch_name} needs a store-backed sink exposing "
-            ".path and .read(spark) (ParquetUpsertSink); got "
-            f"{type(sink).__name__} — its state cannot be merged across "
-            "triggers"
-        )
-    if (
-        expected_key is not None
-        and getattr(sink, "key_cols", expected_key) != expected_key
-    ):
-        raise ValueError(
-            f"sink key_cols must be {expected_key} (one upsert row per "
-            f"sketch state row), got {sink.key_cols}"
-        )
+    _require_sink(sink, sketch_name, "sink", key=expected_key)
 
     def body(batch_df: DataFrame, epoch_id: int) -> None:
         import os
@@ -847,13 +860,7 @@ def streaming_lateness_monitor(sink, late_dir: str | None = None):
 
     from flink_streaming_demo_spark.operators import lateness as L
 
-    if not (hasattr(sink, "path") and hasattr(sink, "read")):
-        raise TypeError(
-            "streaming_lateness_monitor needs a store-backed sink "
-            "exposing .path and .read(spark) (ParquetUpsertSink); got "
-            f"{type(sink).__name__} — its watermark cannot be carried "
-            "across triggers"
-        )
+    _require_sink(sink, "streaming_lateness_monitor", "sink")
 
     def body(batch_df: DataFrame, epoch_id: int) -> None:
         marker = os.path.join(f"{sink.path}_epochs", f"epoch={epoch_id}")
@@ -1052,20 +1059,9 @@ def streaming_bm25_index(postings_sink, lengths_sink):
     """
     from flink_streaming_demo_spark.operators import retrieval as RETR
 
-    for sink, want_key, name in (
-        (postings_sink, ["term", "doc_id"], "postings_sink"),
-        (lengths_sink, ["doc_id"], "lengths_sink"),
-    ):
-        if not (hasattr(sink, "path") and hasattr(sink, "read")):
-            raise TypeError(
-                f"streaming_bm25_index needs store-backed sinks; "
-                f"{name} is {type(sink).__name__}"
-            )
-        if getattr(sink, "key_cols", want_key) != want_key:
-            raise ValueError(
-                f"{name} key_cols must be {want_key} (one row per "
-                f"posting / per doc), got {sink.key_cols}"
-            )
+    who = "streaming_bm25_index"
+    _require_sink(postings_sink, who, "postings_sink", key=["term", "doc_id"])
+    _require_sink(lengths_sink, who, "lengths_sink", key=["doc_id"])
 
     def body(batch_df: DataFrame, epoch_id: int) -> None:
         if not batch_df.head(1):
@@ -1157,20 +1153,11 @@ def streaming_bm25_chunk_index(postings_sink, lengths_sink):
     byte-identically on crash replay — no epoch guard needed."""
     from flink_streaming_demo_spark.operators import retrieval as RETR
 
-    for sink, want_key, name in (
-        (postings_sink, ["term", "doc_id", "chunk_idx"], "postings_sink"),
-        (lengths_sink, ["doc_id", "chunk_idx"], "lengths_sink"),
-    ):
-        if not (hasattr(sink, "path") and hasattr(sink, "read")):
-            raise TypeError(
-                f"streaming_bm25_chunk_index needs store-backed sinks; "
-                f"{name} is {type(sink).__name__}"
-            )
-        if getattr(sink, "key_cols", want_key) != want_key:
-            raise ValueError(
-                f"{name} key_cols must be {want_key} (one row per "
-                f"chunk posting / per chunk), got {sink.key_cols}"
-            )
+    who = "streaming_bm25_chunk_index"
+    _require_sink(postings_sink, who, "postings_sink",
+                  key=["term", "doc_id", "chunk_idx"])
+    _require_sink(lengths_sink, who, "lengths_sink",
+                  key=["doc_id", "chunk_idx"])
 
     def body(batch_df: DataFrame, epoch_id: int) -> None:
         if not batch_df.head(1):
@@ -1220,26 +1207,6 @@ def bm25_maxp_view(
 
 # --- Incremental IVF index (dense-retrieval streaming symmetry) --------------
 
-def _check_ivf_cells_sink(cells_sink) -> None:
-    """Wiring-time validation of an IVF cell store sink, shared by the
-    index maintainer and the dedup gate (r16): the gate used to call
-    ``streaming_ivf_index`` just for these checks and discard the
-    returned body — which also discarded the body's EAGER centroid
-    checkpoint, a thrown-away materialization job per gate wiring."""
-    if not (hasattr(cells_sink, "path") and hasattr(cells_sink, "read")):
-        raise TypeError(
-            "streaming_ivf_index needs a store-backed sink; cells_sink "
-            f"is {type(cells_sink).__name__}"
-        )
-    # getattr default of None (not the expected value): a sink MISSING
-    # the attribute must fail the wiring check, not pass it by default
-    if getattr(cells_sink, "key_cols", None) != ["vec_id"]:
-        raise ValueError(
-            "cells_sink key_cols must be ['vec_id'] (one row per "
-            f"vector), got {getattr(cells_sink, 'key_cols', None)}"
-        )
-
-
 def streaming_ivf_index(cells_sink, centroids):
     """foreachBatch body maintaining an incremental IVF index over an
     append-only embedding stream: one keyed upsert store, (vec_id) ->
@@ -1269,7 +1236,8 @@ def streaming_ivf_index(cells_sink, centroids):
     """
     from flink_streaming_demo_spark.operators import similarity as SIM
 
-    _check_ivf_cells_sink(cells_sink)
+    _require_sink(cells_sink, "streaming_ivf_index", "cells_sink",
+                  key=["vec_id"])
     cent = centroids.select("centroid_id", "embedding").localCheckpoint()
 
     def body(batch_df: DataFrame, epoch_id: int) -> None:
@@ -1393,27 +1361,14 @@ def streaming_ivf_dedup_gate(
 
     from flink_streaming_demo_spark.operators import similarity as SIM
 
-    # cells_sink must be a store-backed read/upsert sink (the gate READS
-    # it); streaming_ivf_index validates that plus the key. The
-    # decisions sink only needs keyed upsert writes — an in-memory sink
-    # is fine for tests — but the check is a hard AND like the sibling
-    # maintainers', not a vacuous OR: a sink missing foreach_batch must
-    # fail at WIRING time, not mid-stream on the first non-empty batch.
-    if not hasattr(decisions_sink, "foreach_batch"):
-        raise TypeError(
-            "streaming_ivf_dedup_gate needs a keyed upsert decisions "
-            f"sink; decisions_sink is {type(decisions_sink).__name__}"
-        )
-    if getattr(decisions_sink, "key_cols", None) != ["vec_id"]:
-        raise ValueError(
-            "decisions_sink key_cols must be ['vec_id'] (one verdict "
-            f"per vector), got {getattr(decisions_sink, 'key_cols', None)}"
-        )
-    # wiring-time validation of cells_sink (path + read + key) only —
-    # the gate body below upserts the already-computed assignment
-    # instead of re-assigning, so no index body (and no discarded
-    # eager centroid checkpoint) is built here (r16).
-    _check_ivf_cells_sink(cells_sink)
+    # The gate READS cells_sink; the decisions sink only takes keyed
+    # upserts (an in-memory sink is fine for tests). The gate body
+    # upserts the already-computed assignment instead of re-assigning,
+    # so no index body is built here.
+    _require_sink(decisions_sink, "streaming_ivf_dedup_gate",
+                  "decisions_sink", key=["vec_id"], readable=False)
+    _require_sink(cells_sink, "streaming_ivf_dedup_gate", "cells_sink",
+                  key=["vec_id"])
     cent = centroids.select("centroid_id", "embedding").localCheckpoint()
 
     def body(batch_df: DataFrame, epoch_id: int) -> None:
@@ -1530,26 +1485,11 @@ def streaming_crossdoc_dedup_gate(
 
     from flink_streaming_demo_spark.operators import dedup as D
 
-    for sink, want_key, name, need_read in (
-        (docs_sink, ["doc_id"], "docs_sink", True),
-        (fps_sink, ["doc_id", "fp"], "fps_sink", True),
-        (decisions_sink, ["doc_id"], "decisions_sink", False),
-    ):
-        if not hasattr(sink, "foreach_batch"):
-            raise TypeError(
-                f"streaming_crossdoc_dedup_gate needs keyed upsert "
-                f"sinks; {name} is {type(sink).__name__}"
-            )
-        if need_read and not (hasattr(sink, "path") and hasattr(sink, "read")):
-            raise TypeError(
-                f"streaming_crossdoc_dedup_gate reads {name} back; it "
-                f"must be store-backed, got {type(sink).__name__}"
-            )
-        if getattr(sink, "key_cols", None) != want_key:
-            raise ValueError(
-                f"{name} key_cols must be {want_key}, got "
-                f"{getattr(sink, 'key_cols', None)}"
-            )
+    who = "streaming_crossdoc_dedup_gate"
+    _require_sink(docs_sink, who, "docs_sink", key=["doc_id"])
+    _require_sink(fps_sink, who, "fps_sink", key=["doc_id", "fp"])
+    _require_sink(decisions_sink, who, "decisions_sink", key=["doc_id"],
+                  readable=False)
 
     kwargs = {}
     if min_span is not None:

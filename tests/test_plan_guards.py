@@ -378,24 +378,13 @@ def test_winnow_pairs_library_path_shares_one_extraction(spark):
 
 
 def test_plan_snapshot_artifact_diffs_against_anchor(tmp_path):
-    """tools/plan_snapshot.py writes a bench-JSON-shaped artifact whose
-    plan_fingerprint/plan_nodes maps tools/bench_plan_diff.py accepts —
-    the full-surface close-ritual contract (r12 verdict #3). Shape-only
+    """``tools/plans.py snapshot`` writes a bench-JSON-shaped artifact
+    whose plan_fingerprint/plan_nodes maps ``diff`` accepts. Shape-only
     (no Spark): a crafted snapshot pair must diff with exit 0 when
     identical and exit 1 on a changed fingerprint."""
     import json
-    import sys
 
-    sys.path.insert(0, str(tmp_path))  # not needed, but keeps sys sane
-    import importlib.util
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "bench_plan_diff", os.path.join(repo, "tools", "bench_plan_diff.py")
-    )
-    bpd = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bpd)
+    from tools import plans as cli
 
     snap = {
         "metric": "plan_snapshot",
@@ -406,13 +395,61 @@ def test_plan_snapshot_artifact_diffs_against_anchor(tmp_path):
     b = tmp_path / "fresh.json"
     a.write_text(json.dumps(snap))
     b.write_text(json.dumps(snap))
-    assert bpd.main(["prog", str(a), str(b)]) == 0
+    assert cli.main(["diff", str(a), str(b)]) == 0
 
     snap2 = dict(snap)
     snap2["plan_fingerprint"] = {"q1": "abc", "q2": "CHANGED"}
     snap2["plan_nodes"] = {"q1": "Scan>Filter", "q2": "Scan>Sort"}
     b.write_text(json.dumps(snap2))
-    assert bpd.main(["prog", str(a), str(b)]) == 1
+    assert cli.main(["diff", str(a), str(b)]) == 1
+
+
+def test_plan_audit_flags_on_crafted_sidecars(tmp_path, monkeypatch):
+    """``tools/plans.py audit`` exit codes on crafted sidecars (no
+    Spark): a CartesianProduct fails; more than NODE_LIMIT nodes fails;
+    an ALLOW entry waives only the node/scan flags, never the cartesian
+    one; a clean sidecar passes."""
+    import json
+
+    from tools import plans as cli
+
+    def audit(plan_nodes) -> int:
+        path = tmp_path / "sidecar.json"
+        path.write_text(json.dumps({"plan_nodes": plan_nodes}))
+        return cli.main(["audit", str(path)])
+
+    clean = "Project>HashAggregate>Exchange>FileSourceScan"
+    big = ">".join(["Project"] * cli.NODE_LIMIT + ["FileSourceScan"])
+    cart = "Project>CartesianProduct>FileSourceScan>FileSourceScan"
+    assert audit({"q": clean}) == 0
+    assert audit({"q": cart}) == 1
+    assert audit({"q": big}) == 1
+    monkeypatch.setitem(cli.ALLOW, "q", "bounded lineage")
+    assert audit({"q": big}) == 0
+    assert audit({"q": cart}) == 1
+    assert audit({"q": big.replace("Project", "CartesianProduct", 1)}) == 1
+
+
+def test_plan_dump_shows_checkpoint_cut_scans(spark, sf_dir):
+    """``tools/plans.py dump`` (``full_plan``) must show the parquet scan
+    under a lazy ``localCheckpoint`` cut that a plain explain hides, and
+    restore ``localCheckpoint`` afterwards."""
+    from pyspark.sql.classic.dataframe import DataFrame as CDF
+
+    from flink_streaming_demo_spark.schemas import load_table
+    from tools import plans as cli
+
+    orig = CDF.localCheckpoint
+
+    def build():
+        cut = load_table(spark, sf_dir, "orders").localCheckpoint(eager=False)
+        return cut.groupBy("o_custkey").count()
+
+    assert "Scan parquet" not in build()._jdf.queryExecution().toString()
+    txt = cli.full_plan(build)
+    assert txt.startswith("# full-tree dump")
+    assert "Scan parquet" in txt
+    assert CDF.localCheckpoint is orig
 
 
 def test_ivf_batch_single_assignment(spark, sf_dir):

@@ -1,17 +1,14 @@
-"""Guards for the driver-window rotation policy (plans/registry.py).
+"""Guards for the driver-window policy (plans/registry.py).
 
-Round 9's process miss: a new round window was never written, so the
-driver silently re-checked the previous round's 50 queries and the
-round's additions got no driver row. These tests make both halves of
-that failure mode loud:
+The driver checks the first 50 names that ``queries()`` returns, and
+``registry.DRIVER_WINDOW`` decides which names those are. These tests
+make the two ways that can go wrong loud:
 
-* forgetting to WRITE a window — the never-driver-checked set (per the
-  committed CORRECTNESS_r*.json union, the same computation as
-  tools/coverage.py) must sit inside the first 50 registered names,
-  which is exactly the slice the driver checks;
-* writing a window but not WIRING it — _apply_window_order auto-selects
-  the highest-numbered _ROUND<N>_WINDOW, and the applied order is
-  asserted to match that selection.
+* a stale window — the never-driver-checked set (per the committed
+  CORRECTNESS_r*.json union, the same computation as tools/coverage.py)
+  and the stalest rows must sit inside the first 50 registered names;
+* a window that is written but not applied — the driver-visible order
+  must start with DRIVER_WINDOW, whatever module is imported first.
 """
 
 from __future__ import annotations
@@ -43,25 +40,19 @@ def test_never_checked_queries_lead_the_window():
     assert not missed, (
         f"{len(missed)} never-driver-checked queries are OUTSIDE the "
         f"first {DRIVER_SLOTS} registered names (the driver's window): "
-        f"{sorted(missed)}. Add them to the front of the active "
-        f"_ROUND<N>_WINDOW in plans/registry.py."
+        f"{sorted(missed)}. Add them to the front of "
+        f"DRIVER_WINDOW in plans/registry.py."
     )
 
 
-def test_active_window_is_highest_round_and_applied():
+def test_driver_window_is_applied():
     from flink_streaming_demo_spark.plans import registry
 
-    windows = {
-        int(m.group(1)): getattr(registry, name)
-        for name in dir(registry)
-        if (m := re.fullmatch(r"_ROUND(\d+)_WINDOW", name))
-    }
-    assert windows, "no _ROUND<N>_WINDOW defined"
-    newest = windows[max(windows)]
-    assert registry._active_window() is newest
-    # the DRIVER-visible order must start with the active window
-    # (restricted to names that are actually registered)
-    expected_head = [n for n in newest if n in registry.QUERIES]
+    # the DRIVER-visible order must start with the window (restricted to
+    # names that are actually registered)
+    window = registry.DRIVER_WINDOW
+    expected_head = [n for n in window if n in registry.QUERIES]
+    assert expected_head
     assert list(registry.ordered_queries())[: len(expected_head)] == (
         expected_head
     )
@@ -70,7 +61,7 @@ def test_active_window_is_highest_round_and_applied():
 def test_window_names_resolve_and_are_unique():
     from flink_streaming_demo_spark.plans import registry
 
-    window = registry._active_window()
+    window = registry.DRIVER_WINDOW
     assert len(window) == len(set(window)), "duplicate names in window"
     assert len(window) <= DRIVER_SLOTS, (
         f"window has {len(window)} names but the driver only checks "
@@ -100,8 +91,8 @@ def test_stale_queries_forced_into_window():
     NEVER-checked queries into the window, but displacement of old rows
     was legal and unguarded — that is exactly how four queries reached
     age-5 evidence by r11. Fail if any registered query's latest driver
-    row is older than STALENESS_CEILING rounds and the query is not in
-    the active window's first DRIVER_SLOTS names (where the upcoming
+    row is older than STALENESS_CEILING rounds and the query is not among
+    the first DRIVER_SLOTS driver-order names (where the upcoming
     round would refresh it)."""
     from flink_streaming_demo_spark.plans import registry
 
@@ -121,10 +112,10 @@ def test_stale_queries_forced_into_window():
     ]
     assert not stale, (
         f"{len(stale)} queries have driver evidence older than "
-        f"{STALENESS_CEILING} rounds and are NOT in the active window's "
+        f"{STALENESS_CEILING} rounds and are NOT in the driver window's "
         f"first {DRIVER_SLOTS} slots: "
-        f"{sorted((n, latest[n]) for n in stale)}. Front them in the "
-        f"active _ROUND<N>_WINDOW in plans/registry.py."
+        f"{sorted((n, latest[n]) for n in stale)}. Front them in "
+        f"DRIVER_WINDOW in plans/registry.py."
     )
 
 
@@ -162,7 +153,7 @@ def test_order_survives_plans_module_imported_first():
             "import __spark_entry__ as e\n"
             "from flink_streaming_demo_spark.plans import registry\n"
             "names = list(e.queries())\n"
-            "window = [n for n in registry._active_window() if n in names]\n"
+            "window = [n for n in registry.DRIVER_WINDOW if n in names]\n"
             "assert names[:len(window)] == window, names[:10]\n"
             "print('OK', len(names))\n"
         ) % (REPO, mod)

@@ -1440,6 +1440,20 @@ def test_streaming_kmv_sketch_equals_batch_and_is_replay_idempotent(
         shutil.rmtree(store, ignore_errors=True)
 
 
+class _KeylessStoreSink:
+    """Store-backed in shape (.path, .read, .foreach_batch) but without
+    ``key_cols``: a maintainer that checks the upsert key must reject
+    it, not pass it by defaulting the missing attribute."""
+
+    path = "/tmp/never-created"
+
+    def read(self, spark):
+        raise AssertionError("wiring check must fail before any read")
+
+    def foreach_batch(self, batch_df, epoch_id):
+        raise AssertionError("wiring check must fail before any write")
+
+
 def test_streaming_kmv_rejects_storeless_sink_at_construction():
     """The KMV maintenance body reads the sink's store back each trigger
     (sink.path / sink.read); a sink without a readable store must be
@@ -1554,6 +1568,31 @@ def test_streaming_hll_rejects_bad_sinks_at_construction():
             ["event_type"],
             "user_id",
         )
+    with pytest.raises(ValueError, match="key_cols"):
+        streaming_hll_distinct(
+            _KeylessStoreSink(), ["event_type"], "user_id"
+        )
+
+
+def test_streaming_bm25_rejects_keyless_sinks_at_construction():
+    """Both BM25 maintainers upsert postings and lengths by key; a
+    store-backed sink without ``key_cols`` must fail at wiring time."""
+    import pytest
+
+    from flink_streaming_demo_spark.streaming.pipelines import (
+        streaming_bm25_chunk_index,
+        streaming_bm25_index,
+    )
+    from flink_streaming_demo_spark.streaming.sinks import ParquetUpsertSink
+
+    lengths = ParquetUpsertSink("/tmp/never-created", ["doc_id"])
+    with pytest.raises(ValueError, match="postings_sink key_cols"):
+        streaming_bm25_index(_KeylessStoreSink(), lengths)
+    postings = ParquetUpsertSink(
+        "/tmp/never-created", ["term", "doc_id", "chunk_idx"]
+    )
+    with pytest.raises(ValueError, match="lengths_sink key_cols"):
+        streaming_bm25_chunk_index(postings, _KeylessStoreSink())
 
 
 def test_streaming_bloom_converges_and_replays_idempotently(spark, sf_dir):
@@ -2887,6 +2926,12 @@ def test_streaming_ivf_dedup_gate_rejects_bad_decisions_sink(spark, sf_dir):
         wrong_key = ParquetUpsertSink(root + "/d", ["vec_id", "slice"])
         with _pytest.raises(ValueError, match="key_cols"):
             streaming_ivf_dedup_gate(cells, wrong_key, centroids, 0.4)
+        with _pytest.raises(ValueError, match="cells_sink"):
+            streaming_ivf_dedup_gate(
+                _KeylessStoreSink(),
+                ParquetUpsertSink(root + "/d", ["vec_id"]),
+                centroids, 0.4,
+            )
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -3075,6 +3120,8 @@ def test_streaming_crossdoc_dedup_gate_rejects_bad_sinks(spark):
             streaming_crossdoc_dedup_gate(
                 docs, fps, ParquetUpsertSink(root + "/d2", ["doc_id", "s"])
             )
+        with pytest.raises(ValueError, match="fps_sink"):
+            streaming_crossdoc_dedup_gate(docs, _KeylessStoreSink(), dec)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

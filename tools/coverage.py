@@ -426,24 +426,22 @@ def main() -> int:
             label = ", ".join(names) if age >= 2 else f"{len(names)} queries"
             print(f"  {age} rounds: {len(names):3d}  {label if age >= 2 else label}")
 
-    # --suggest-window: emit the next round's 50-slot window candidate
-    # as a ready-to-paste python list — never-checked first (in
-    # registration order), then oldest-driver-row-first. This output
-    # DRIVES plans/registry.py's _ROUND<N>_WINDOW (the r9 stale-window
-    # miss would have been a one-command catch; the window-hygiene test
-    # in tests/test_registry_window.py then enforces the result).
+    # --suggest-window: emit the next 50-slot window as a ready-to-paste
+    # DRIVER_WINDOW for plans/registry.py — never-checked first (in
+    # registration order), then oldest-driver-row-first. The
+    # window-hygiene test in tests/test_registry_window.py then enforces
+    # the result.
     if "--suggest-window" in sys.argv:
         slots = 50
         order = [n for n in QUERIES if n in never]
         if latest:
-            cur = max(r for r, _ in latest.values())
             aged = sorted(
                 (n for n in QUERIES if n in latest),
                 key=lambda n: (latest[n][0], list(QUERIES).index(n)),
             )
             order += aged
-        print(f"\nsuggested _ROUND<N+1>_WINDOW ({slots} slots):")
-        print("[")
+        print(f"\n# suggested window ({slots} slots)")
+        print("DRIVER_WINDOW = [")
         for n in order[:slots]:
             tag = "never-checked" if n in never else f"r{latest[n][0]}"
             print(f'    "{n}",  # {tag}')
