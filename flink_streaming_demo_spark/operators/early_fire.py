@@ -14,13 +14,15 @@ examples/EarlyArrivalCount.scala:117-160):
 
 The fire points are inherently sequential (each fire re-bases the next
 threshold), so this is NOT expressible as an ANSI-SQL aggregation — it is
-the engine's one custom stateful operator, implemented as:
+the engine's one custom stateful operator. Its fire loop is written once,
+``fire_fold``, and run by both executions:
 
-* batch: ``applyInPandas`` per (cell, window) — replays events in event-time
-  order, emitting every partial fire + the final (this module);
+* batch: ``applyInPandas`` per (cell, window) — folds the pane's events in
+  event-time order from a zero counter, then appends the final (this
+  module);
 * streaming: ``applyInPandasWithState`` with event-time timeout
-  (streaming/early_trigger.py) — identical per-group logic with the counter
-  carried in keyed state across micro-batches.
+  (streaming/early_trigger.py) — folds each micro-batch's events from the
+  (counter, total, seq) carried in keyed state.
 
 Scale: groups are (cell, window) — bounded at ~100k cells x 3 live panes;
 each group's pane events fit trivially in an Arrow batch. One shuffle on the
@@ -28,8 +30,6 @@ group key, same as the plain windowed aggregate.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -50,17 +50,15 @@ FIRE_SCHEMA = T.StructType(
 )
 
 
-def _replay_group(pdf: pd.DataFrame, threshold: int) -> pd.DataFrame:
-    """Replay one (cell, window) pane in event-time order, emitting the
-    reference trigger's fire sequence."""
-    pdf = pdf.sort_values(["ts", "passenger_cnt"], kind="mergesort")
-    cell = int(pdf["cell"].iloc[0])
-    w_end = pdf["w_end"].iloc[0]
+def fire_fold(
+    cell, w_end, counts, counter: int, total: int, seq: int, threshold: int
+) -> tuple[list[tuple], int, int, int]:
+    """Advance one (cell, window) pane's trigger over ``counts`` (passenger
+    counts, already in replay order) from the carried (counter, total,
+    seq). Returns the partial fires it emits, as FIRE_SCHEMA tuples, and
+    the new (counter, total, seq)."""
     fires: list[tuple] = []
-    counter = 0
-    total = 0
-    seq = 0
-    for cnt in pdf["passenger_cnt"]:
+    for cnt in counts:
         c = int(cnt)
         total += c
         counter += c
@@ -68,6 +66,18 @@ def _replay_group(pdf: pd.DataFrame, threshold: int) -> pd.DataFrame:
             fires.append((cell, w_end, total, False, seq))
             seq += 1
             counter = 0
+    return fires, counter, total, seq
+
+
+def _replay_group(pdf: pd.DataFrame, threshold: int) -> pd.DataFrame:
+    """Replay one (cell, window) pane in event-time order, emitting the
+    reference trigger's fire sequence."""
+    pdf = pdf.sort_values(["ts", "passenger_cnt"], kind="mergesort")
+    cell = int(pdf["cell"].iloc[0])
+    w_end = pdf["w_end"].iloc[0]
+    fires, _, total, seq = fire_fold(
+        cell, w_end, pdf["passenger_cnt"], 0, 0, 0, threshold
+    )
     fires.append((cell, w_end, total, True, seq))
     return pd.DataFrame(
         fires, columns=["cell", "window_end", "cnt", "is_final", "fire_seq"]

@@ -1,8 +1,9 @@
 """Batch pipelines for the reference's three demo applications.
 
-Each pipeline is a plain DataFrame transformation chain — usable unchanged on
-a batch or streaming DataFrame (Structured Streaming variants in
-``flink_streaming_demo_spark.streaming``). Spark plans these as:
+Each pipeline is a plain DataFrame transformation chain and the one
+definition of its app: batch queries, the Structured Streaming forms
+(streaming/pipelines.py runs these same functions on a stream) and, below,
+the DuckDB oracle twins all start from it. Spark plans these as:
 scan -> Filter+Project (fused into one whole-stage-codegen span, with the
 bbox predicate pushed to the parquet scan) -> partial HashAggregate ->
 Exchange hashpartitioning(cell) -> final HashAggregate. The exchange is the
@@ -137,14 +138,40 @@ def sliding_arrival_count(
 # ---------------------------------------------------------------------------
 
 def _arrivals_cte(rides_sql: str) -> str:
+    """``WITH`` prefix defining ``rides`` and ``arrivals`` (cell, ts,
+    passenger_cnt), the SQL twin of ``arrival_events``. Every taxi oracle
+    starts from it. It says RECURSIVE so that a caller may append a
+    recursive CTE (the early-fire oracle); DuckDB accepts the keyword
+    over plain CTEs too."""
     cell = geo.sql_grid_cell("lon", "lat")
     bbox = geo.sql_is_in_nyc("lon", "lat")
     return f"""
-        WITH rides AS ({rides_sql}),
+        WITH RECURSIVE rides AS ({rides_sql}),
         arrivals AS (
             SELECT {cell} AS cell, ts, passenger_cnt
             FROM rides
             WHERE NOT is_start AND {bbox}
+        )
+    """
+
+
+def _panes_cte(rides_sql: str) -> str:
+    """``_arrivals_cte`` plus ``expanded`` (cell, ts, passenger_cnt,
+    w_start): each arrival in its 3 overlapping 15m/5m panes. DuckDB has
+    no Spark-style ``window()`` table function, so a generate_series
+    cross join does the expansion (SURVEY §7.4). ``time_bucket`` with a
+    5-minute width aligns on epoch boundaries exactly like Spark's window
+    start rule ``ts - (ts - epoch) % slide``."""
+    return f"""
+        {_arrivals_cte(rides_sql)},
+        expanded AS (
+            SELECT
+                cell,
+                ts,
+                passenger_cnt,
+                time_bucket(INTERVAL '5 minutes', ts)
+                    - g.k * INTERVAL '5 minutes' AS w_start
+            FROM arrivals, generate_series(0, 2) AS g(k)
         )
     """
 
@@ -164,22 +191,9 @@ def total_arrival_count_sql(rides_sql: str) -> str:
 
 
 def sliding_arrival_count_sql(rides_sql: str) -> str:
-    """Sliding 15m/5m window oracle: DuckDB has no Spark-style ``window()``
-    table function, so expand each event into its 3 overlapping panes with a
-    generate_series cross join (SURVEY §7.4). ``time_bucket`` with a 5-minute
-    width aligns on epoch boundaries exactly like Spark's window start rule
-    ``ts - (ts - epoch) % slide``.
-    """
+    """Sliding 15m/5m window oracle over ``_panes_cte``."""
     return f"""
-        {_arrivals_cte(rides_sql)},
-        expanded AS (
-            SELECT
-                cell,
-                passenger_cnt,
-                time_bucket(INTERVAL '5 minutes', ts)
-                    - g.k * INTERVAL '5 minutes' AS w_start
-            FROM arrivals, generate_series(0, 2) AS g(k)
-        )
+        {_panes_cte(rides_sql)}
         SELECT
             cell,
             w_start + INTERVAL '15 minutes' AS window_end,

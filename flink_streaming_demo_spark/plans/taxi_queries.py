@@ -31,13 +31,8 @@ register(
     "taxi_end_events",
     taxi_end_events,
     f"""
-    WITH rides AS ({_RIDES_SQL})
-    SELECT
-        {geo.sql_grid_cell('lon', 'lat')} AS cell,
-        ts,
-        passenger_cnt
-    FROM rides
-    WHERE NOT is_start AND {geo.sql_is_in_nyc('lon', 'lat')}
+    {taxi_apps._arrivals_cte(_RIDES_SQL)}
+    SELECT cell, ts, passenger_cnt FROM arrivals
     """,
 )
 
@@ -138,18 +133,7 @@ def _early_fires_oracle() -> str:
     from flink_streaming_demo_spark.operators.early_fire import sql_fire_jump
 
     return f"""
-    WITH RECURSIVE rides AS ({_RIDES_SQL}),
-    arrivals AS (
-        SELECT {geo.sql_grid_cell('lon', 'lat')} AS cell, ts, passenger_cnt
-        FROM rides
-        WHERE NOT is_start AND {geo.sql_is_in_nyc('lon', 'lat')}
-    ),
-    expanded AS (
-        SELECT cell, passenger_cnt, ts,
-               time_bucket(INTERVAL '5 minutes', ts)
-                   - g.k * INTERVAL '5 minutes' AS w_start
-        FROM arrivals, generate_series(0, 2) AS g(k)
-    ),
+    {taxi_apps._panes_cte(_RIDES_SQL)},
     {sql_fire_jump('expanded')}
     SELECT cell, w_start + INTERVAL '15 minutes' AS window_end,
            cnt, is_final, fire_seq
@@ -382,12 +366,7 @@ register(
     "layout_zorder_cells",
     layout_zorder_cells,
     f"""
-    WITH rides AS ({_RIDES_SQL}),
-    arrivals AS (
-        SELECT {geo.sql_grid_cell('lon', 'lat')} AS cell
-        FROM rides
-        WHERE NOT is_start AND {geo.sql_is_in_nyc('lon', 'lat')}
-    ),
+    {taxi_apps._arrivals_cte(_RIDES_SQL)},
     cells AS (SELECT DISTINCT cell FROM arrivals),
     xy AS (
         SELECT cell,
@@ -488,12 +467,7 @@ register(
     "layout_hilbert_cells",
     layout_hilbert_cells,
     f"""
-    WITH rides AS ({_RIDES_SQL}),
-    arrivals AS (
-        SELECT {geo.sql_grid_cell('lon', 'lat')} AS cell
-        FROM rides
-        WHERE NOT is_start AND {geo.sql_is_in_nyc('lon', 'lat')}
-    ),
+    {taxi_apps._arrivals_cte(_RIDES_SQL)},
     cells AS (SELECT DISTINCT cell FROM arrivals),
     xy AS (
         SELECT cell,
@@ -632,12 +606,7 @@ register(
     "layout_skipping_stats",
     layout_skipping_stats,
     f"""
-    WITH rides AS ({_RIDES_SQL}),
-    arrivals AS (
-        SELECT {geo.sql_grid_cell('lon', 'lat')} AS cell
-        FROM rides
-        WHERE NOT is_start AND {geo.sql_is_in_nyc('lon', 'lat')}
-    ),
+    {taxi_apps._arrivals_cte(_RIDES_SQL)},
     cells AS (SELECT DISTINCT cell FROM arrivals),
     xy AS (
         SELECT cell,

@@ -6,7 +6,7 @@ Maps the reference trigger's callbacks onto Spark's grouped-state API:
 | Flink trigger (reference)                         | Here                        |
 |---------------------------------------------------|-----------------------------|
 | keyed `personCnt` state (EarlyArrivalCount:129)   | GroupState (counter, total) |
-| onElement: bump, FIRE at >= 50, reset (:131-141)  | per-batch replay loop       |
+| onElement: bump, FIRE at >= 50, reset (:131-141)  | early_fire.fire_fold        |
 | registerEventTimeTimer(window end) (:126)         | setTimeoutTimestamp(w_end)  |
 | onEventTime: FIRE_AND_PURGE (:144-151)            | timeout branch: final+remove|
 
@@ -28,12 +28,12 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 from pyspark.sql import types as T
 
 from flink_streaming_demo_spark.operators.early_fire import (
     DEFAULT_THRESHOLD,
     FIRE_SCHEMA,
+    fire_fold,
 )
 from flink_streaming_demo_spark.operators.windows import assign_sliding_windows
 
@@ -75,14 +75,11 @@ def streaming_early_fire_counts(
         fires: list[tuple] = []
         for pdf in pdfs:
             pdf = pdf.sort_values(["ts", "passenger_cnt"], kind="mergesort")
-            for cnt in pdf["passenger_cnt"]:
-                c = int(cnt)
-                total += c
-                counter += c
-                if counter >= threshold:
-                    fires.append((cell, w_end, total, False, seq))
-                    seq += 1
-                    counter = 0
+            new, counter, total, seq = fire_fold(
+                cell, w_end, pdf["passenger_cnt"], counter, total, seq,
+                threshold,
+            )
+            fires += new
         state.update((counter, total, seq))
         # Event-time timer for the final FIRE_AND_PURGE at watermark >= end
         # (reference: examples/EarlyArrivalCount.scala:126,144-151).
@@ -98,100 +95,4 @@ def streaming_early_fire_counts(
         STATE_SCHEMA,
         "append",
         GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-# --- transformWithState form (Spark 4 StatefulProcessor) ----------------------
-
-class EarlyFireProcessor(StatefulProcessor):
-    """W3 exact early trigger as a Spark-4 ``StatefulProcessor`` — the
-    closest structural match to the reference trigger yet: per-(cell,
-    window) VALUE state plus a first-class event-time TIMER, one callback
-    per Flink callback (reference: examples/EarlyArrivalCount.scala:117-160):
-
-    | Flink trigger (reference)                       | StatefulProcessor    |
-    |-------------------------------------------------|----------------------|
-    | `personCnt` value state (EarlyArrivalCount:129) | getValueState        |
-    | onElement: bump, FIRE >= 50, reset (:131-141)   | handleInputRows      |
-    | registerEventTimeTimer(window.getEnd) (:126)    | handle.registerTimer |
-    | onEventTime: FIRE_AND_PURGE (:144-151)          | handleExpiredTimer   |
-
-    Unlike applyInPandasWithState (timeout-as-state-flag, one combined
-    callback), expiry here is a separate callback with the partial/final
-    split enforced by the engine. Requires the RocksDB state store
-    provider (transformWithState's backing store) AND the ``protobuf``
-    package — transformWithState's Python<->JVM state protocol imports
-    ``google.protobuf`` in its driver worker. This container ships no
-    protobuf (and installs are unavailable), so the test for this
-    operator skips here (environment-blocked, like the media-decode
-    stubs); applyInPandasWithState above is the proven streaming path,
-    pinned by test_streaming_early_fire_converges_and_fires_early.
-    """
-
-    def __init__(self, threshold: int, window_secs: int):
-        self.threshold = threshold
-        self.window_secs = window_secs
-
-    def init(self, handle) -> None:
-        self.handle = handle
-        self.state = handle.getValueState("fire", STATE_SCHEMA)
-
-    def _w_end(self, key: tuple) -> pd.Timestamp:
-        return pd.Timestamp(key[1]) + pd.Timedelta(seconds=self.window_secs)
-
-    def handleInputRows(self, key, rows, timerValues):
-        cell = int(key[0])
-        w_end = self._w_end(key)
-        counter, total, seq = (
-            self.state.get() if self.state.exists() else (0, 0, 0)
-        )
-        fires: list[tuple] = []
-        for pdf in rows:
-            pdf = pdf.sort_values(["ts", "passenger_cnt"], kind="mergesort")
-            for cnt in pdf["passenger_cnt"]:
-                c = int(cnt)
-                total += c
-                counter += c
-                if counter >= self.threshold:
-                    fires.append((cell, w_end, total, False, seq))
-                    seq += 1
-                    counter = 0
-        self.state.update((counter, total, seq))
-        # event-time timer at window end; re-registering the same expiry
-        # per micro-batch is idempotent ((key, ts) identifies the timer)
-        self.handle.registerTimer(int(w_end.timestamp() * 1000))
-        if fires:
-            yield pd.DataFrame(
-                fires, columns=[f.name for f in FIRE_SCHEMA.fields]
-            )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        if not self.state.exists():
-            return
-        counter, total, seq = self.state.get()
-        self.state.clear()
-        yield pd.DataFrame(
-            [(int(key[0]), self._w_end(key), total, True, seq)],
-            columns=[f.name for f in FIRE_SCHEMA.fields],
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def tws_early_fire_counts(
-    arrivals: DataFrame,
-    threshold: int = DEFAULT_THRESHOLD,
-    window_secs: int = 900,
-    slide_secs: int = 300,
-) -> DataFrame:
-    """``transformWithStateInPandas`` form of streaming_early_fire_counts
-    (identical fire sequence; see EarlyFireProcessor). Input must be
-    watermarked; the session must run the RocksDB state store provider."""
-    windowed = assign_sliding_windows(arrivals, "ts", window_secs, slide_secs)
-    return windowed.groupBy("cell", "w_start").transformWithStateInPandas(
-        EarlyFireProcessor(threshold, window_secs),
-        FIRE_SCHEMA,
-        "append",
-        "eventTime",
     )

@@ -1,20 +1,23 @@
-"""Structured Streaming variants of the three demo apps.
+"""Structured Streaming forms of the engine's pipelines.
 
-The *same* transformation chains as plans/taxi_apps.py, applied to a
-streaming DataFrame — the point of the Spark-first design: one logical plan,
-batch or incremental physical execution chosen by the engine.
+The three demo apps are defined once, in plans/taxi_apps.py, and that one
+definition runs on a batch or a streaming DataFrame — the Spark-first
+design: one logical plan, batch or incremental physical execution chosen by
+the engine. This module adds only what a stream needs on top of it.
 
 Output-mode mapping (SURVEY §3):
 
 * App 1 (running total, per-record emission — reference:
-  examples/TotalArrivalCount.scala:75-80): ``update`` output mode — every
-  changed cell re-emits per micro-batch, the micro-batch analogue of Flink's
-  per-record fold emission. Combined with a keyed upsert sink (K3) the
-  observable behavior is identical: last write per cell wins.
+  examples/TotalArrivalCount.scala:75-80): ``taxi_apps.total_arrival_count``
+  on the stream, in ``update`` output mode — every changed cell re-emits per
+  micro-batch, the micro-batch analogue of Flink's per-record fold
+  emission. Combined with a keyed upsert sink (K3) the observable behavior
+  is identical: last write per cell wins.
 * App 2 (sliding window, fire at watermark — reference:
-  examples/SlidingArrivalCount.scala:81-93): ``append`` mode after
-  ``withWatermark`` — results emit exactly once when the watermark passes
-  window end, Flink's default event-time trigger.
+  examples/SlidingArrivalCount.scala:81-93):
+  ``streaming_sliding_arrival_count`` is ``taxi_apps.sliding_arrival_count``
+  after ``withWatermark``, in ``append`` mode — results emit exactly once
+  when the watermark passes window end, Flink's default event-time trigger.
 * App 3 (early firing — reference: examples/EarlyArrivalCount.scala:117-160):
   ``update`` mode emits time-driven partials (every micro-batch); the exact
   *count-driven* cadence lives in streaming/early_trigger.py.
@@ -25,8 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from flink_streaming_demo_spark.functions import geo, text as TX
-from flink_streaming_demo_spark.plans.taxi_apps import arrival_events
+from flink_streaming_demo_spark.functions import text as TX
+from flink_streaming_demo_spark.plans import taxi_apps
 
 
 def streaming_dedup(
@@ -129,22 +132,6 @@ def clean_corpus_compact(store_docs: DataFrame,
     return drop_neardup_clusters(store_docs, threshold=threshold)
 
 
-def streaming_total_arrival_count(rides: DataFrame) -> DataFrame:
-    """App 1 streaming: unbounded keyed running aggregate (use with
-    outputMode('update') + upsert sink keyed by cell)."""
-    agg = arrival_events(rides).groupBy("cell").agg(
-        F.max("ts").alias("max_ts"),
-        F.sum("passenger_cnt").cast("bigint").alias("cnt"),
-    )
-    return agg.select(
-        "cell",
-        "max_ts",
-        geo.cell_center_lon(F.col("cell")).alias("center_lon"),
-        geo.cell_center_lat(F.col("cell")).alias("center_lat"),
-        "cnt",
-    )
-
-
 def streaming_sliding_arrival_count(
     rides: DataFrame,
     watermark_delay: str = "60 seconds",
@@ -159,18 +146,8 @@ def streaming_sliding_arrival_count(
     (reference: examples/SlidingArrivalCount.scala:49) and its bounded-delay
     watermark contract (reference: sources/TaxiRideSource.scala:195,258).
     """
-    agg = (
-        rides.withWatermark("ts", watermark_delay)
-        .transform(arrival_events)
-        .groupBy(F.window(F.col("ts"), window, slide), F.col("cell"))
-        .agg(F.sum("passenger_cnt").cast("bigint").alias("cnt"))
-    )
-    return agg.select(
-        F.col("cell"),
-        F.col("window.end").alias("window_end"),
-        geo.cell_center_lon(F.col("cell")).alias("center_lon"),
-        geo.cell_center_lat(F.col("cell")).alias("center_lat"),
-        F.col("cnt"),
+    return taxi_apps.sliding_arrival_count(
+        rides.withWatermark("ts", watermark_delay), window, slide
     )
 
 
@@ -629,6 +606,27 @@ def streaming_hist_counts(
     )
 
 
+def _rolling_fan(
+    store: DataFrame, day_col: str, window_days: int, *cols: str
+) -> tuple[DataFrame, DataFrame]:
+    """The day -> window-end fan-out every rolling view shares: each
+    per-day store row, carrying ``cols``, goes to the ≤``window_days``
+    window-ends (``win_day``) it falls in. Also returns the observed
+    days as ``win_day`` — the window-ends a view serves, matching the
+    batch rolling queries, which emit no row for a day without data."""
+    fan = store.select(
+        F.explode(
+            F.expr(
+                f"sequence({day_col}, {day_col} + interval "
+                f"{window_days - 1} days, interval 1 day)"
+            )
+        ).alias("win_day"),
+        *cols,
+    )
+    observed = store.select(F.col(day_col).alias("win_day")).distinct()
+    return fan, observed
+
+
 def rolling_kmv_view(
     store: DataFrame,
     day_col: str = "day",
@@ -660,17 +658,8 @@ def rolling_kmv_view(
 
     if k is None:
         k = KMV_K
-    fan = store.select(
-        F.explode(
-            F.expr(
-                f"sequence({day_col}, {day_col} + interval "
-                f"{window_days - 1} days, interval 1 day)"
-            )
-        ).alias("win_day"),
-        "kmv",
-    )
+    fan, observed = _rolling_fan(store, day_col, window_days, "kmv")
     rolled = kmv_rollup(fan, ["win_day"], k)
-    observed = store.select(F.col(day_col).alias("win_day")).distinct()
     return kmv_estimate(rolled.join(observed, "win_day"), k).select(
         "win_day", "n_sampled", "kmv_distinct"
     )
@@ -696,18 +685,8 @@ def rolling_hll_view(
         hll_rollup,
     )
 
-    fan = store.select(
-        F.explode(
-            F.expr(
-                f"sequence({day_col}, {day_col} + interval "
-                f"{window_days - 1} days, interval 1 day)"
-            )
-        ).alias("win_day"),
-        "bucket",
-        "rho",
-    )
+    fan, observed = _rolling_fan(store, day_col, window_days, "bucket", "rho")
     rolled = hll_rollup(fan, ["win_day"])
-    observed = store.select(F.col(day_col).alias("win_day")).distinct()
     return hll_estimate(rolled.join(observed, "win_day"), ["win_day"])
 
 
@@ -736,18 +715,8 @@ def rolling_hist_view(
     )
 
     bins = HIST_N_BINS if n_bins is None else n_bins
-    fan = store.select(
-        F.explode(
-            F.expr(
-                f"sequence({day_col}, {day_col} + interval "
-                f"{window_days - 1} days, interval 1 day)"
-            )
-        ).alias("win_day"),
-        "bin",
-        "cnt",
-    )
+    fan, observed = _rolling_fan(store, day_col, window_days, "bin", "cnt")
     rolled = hist_rollup(fan, ["win_day"])
-    observed = store.select(F.col(day_col).alias("win_day")).distinct()
     return hist_quantiles(
         rolled.join(observed, "win_day"), ["win_day"], qs, lo, hi, bins
     )
@@ -775,16 +744,8 @@ def rolling_cms_view(
         cms_rollup,
     )
 
-    fan = store.select(
-        F.explode(
-            F.expr(
-                f"sequence({day_col}, {day_col} + interval "
-                f"{window_days - 1} days, interval 1 day)"
-            )
-        ).alias("win_day"),
-        "row",
-        "col",
-        "cnt",
+    fan, _ = _rolling_fan(
+        store, day_col, window_days, "row", "col", "cnt"
     )
     rolled = cms_rollup(fan, ["win_day"])
     return cms_estimate(rolled, probes, ["win_day"], key_col)

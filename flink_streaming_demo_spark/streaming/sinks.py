@@ -66,48 +66,14 @@ class InMemoryUpsertSink:
         self.rows: dict[tuple, dict] = {}
         self._lock = threading.Lock()
 
-    @staticmethod
-    def _tuple_lt(a: tuple, b: tuple) -> bool:
-        """Lexicographic < with None smallest — Python analogue of Spark's
-        struct ordering (NULLS FIRST), so the all-null-order fallback
-        picks the same row as ParquetUpsertSink's max(struct)."""
-        for x, y in zip(a, b):
-            if x == y:
-                continue
-            if x is None:
-                return True
-            if y is None:
-                return False
-            return x < y
-        return False
-
-    def _beats(self, new: dict, cur: dict) -> bool:
-        """Within-batch winner rule, aligned with ParquetUpsertSink:
-        non-null order beats null; higher order wins; all-null (or tied)
-        orders fall back to the greatest value tuple."""
-        c = self.order_col
-        no, co = new[c], cur[c]
-        if (no is None) != (co is None):
-            return co is None
-        if no is not None and no != co:
-            return co < no
-        vals = [k for k in new if k not in self.key_cols]
-        return self._tuple_lt(
-            tuple(cur[k] for k in vals), tuple(new[k] for k in vals)
-        )
-
     def foreach_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        collected = [r.asDict() for r in batch_df.collect()]
-        best: dict[tuple, dict] = {}
-        for d in collected:
-            key = tuple(d[k] for k in self.key_cols)
-            if key not in best or self.order_col is None or self._beats(
-                d, best[key]
-            ):
-                best[key] = d
+        # within batch: the shared winner rule (latest_per_key), columns
+        # back in batch-schema order; cross-batch: the later micro-batch
+        # always wins, same as the parquet sink's anti-join
+        latest = latest_per_key(batch_df, self.key_cols, self.order_col)
+        rows = latest.select(*batch_df.columns).collect()
+        best = {tuple(r[k] for k in self.key_cols): r.asDict() for r in rows}
         with self._lock:
-            # cross-batch: the later micro-batch always wins (same as the
-            # parquet sink's anti-join), order_col arbitrates within batch
             self.rows.update(best)
 
     def snapshot(self) -> list[dict]:
@@ -124,9 +90,8 @@ def latest_per_key(
     struct(order_col, value tuple) — struct ordering is field-by-field
     with nulls smallest, so a non-null order beats a null one, a higher
     order wins, and TIED (or all-null) orders fall back to the
-    lexicographically greatest value tuple — the exact rule
-    InMemoryUpsertSink._beats implements. The ordering struct itself is
-    never null, so max_by's null-skip behavior never engages."""
+    lexicographically greatest value tuple. The ordering struct itself
+    is never null, so max_by's null-skip behavior never engages."""
     if order_col is None:
         return batch_df.dropDuplicates(key_cols)
     val_cols = [c for c in batch_df.columns if c not in key_cols]
@@ -175,9 +140,6 @@ class ParquetUpsertSink:
         self.key_cols = list(key_cols)
         self.order_col = order_col
         self.n_buckets = int(n_buckets)
-
-    def _latest_per_key(self, batch_df: DataFrame) -> DataFrame:
-        return latest_per_key(batch_df, self.key_cols, self.order_col)
 
     def _bucketed(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
@@ -256,7 +218,9 @@ class ParquetUpsertSink:
 
     def foreach_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        fresh = self._bucketed(self._latest_per_key(batch_df))
+        fresh = self._bucketed(
+            latest_per_key(batch_df, self.key_cols, self.order_col)
+        )
         # One small driver fetch (≤ n_buckets rows) in EVERY branch: an
         # empty batch must short-circuit even on the first micro-batch — a
         # partitioned write of an empty frame emits no part files, and the

@@ -136,3 +136,37 @@ def test_closure_fp_distinguishes_broken_file_versions(tmp_path):
         f.write("def broken(:  # v2\n")
     fp_broken2 = closure_exec_fp(root, mod, {}, {})
     assert fp_broken1 != fp_broken2
+
+
+def test_import_closure_stops_at_the_registry(tmp_path):
+    """The registry imports every plans module to register them, so a
+    closure that follows it is the whole package for every query, and
+    any edit anywhere invalidates every parity-ledger proof. A query
+    module's closure must hold what it imports, not its registry's
+    other modules, and not the registry file itself."""
+    from tools.coverage import import_closure
+
+    root = str(tmp_path)
+    _write_pkg(root, {
+        "__init__.py": "",
+        "plans/__init__.py": "",
+        "plans/registry.py": (
+            "def _load_all():\n"
+            "    from flink_streaming_demo_spark.plans import sibling\n"
+        ),
+        "plans/query.py": (
+            "from flink_streaming_demo_spark.plans.registry import "
+            "register\n"
+            "from flink_streaming_demo_spark.plans import helper\n"
+        ),
+        "plans/helper.py": "",
+        "plans/sibling.py": "",
+    })
+    closure = import_closure(
+        root, "flink_streaming_demo_spark.plans.query", {}
+    )
+    assert closure == {
+        "flink_streaming_demo_spark/plans/query.py",
+        "flink_streaming_demo_spark/plans/helper.py",
+        "flink_streaming_demo_spark/plans/__init__.py",
+    }

@@ -165,9 +165,6 @@ def test_duckdb_sink_in_a_real_update_stream(spark, sf_dir, root):
     )
     from flink_streaming_demo_spark.sources.taxi import synthetic_taxi_rides
     from flink_streaming_demo_spark.streaming import replay
-    from flink_streaming_demo_spark.streaming.pipelines import (
-        streaming_total_arrival_count,
-    )
     from flink_streaming_demo_spark.streaming.sinks import (
         write_update_stream,
     )
@@ -186,7 +183,7 @@ def test_duckdb_sink_in_a_real_update_stream(spark, sf_dir, root):
             spark, chunk_dir, schema, max_files_per_trigger=1
         )
         q = write_update_stream(
-            streaming_total_arrival_count(stream), sink, "k3_duck", "update"
+            total_arrival_count(stream), sink, "k3_duck", "update"
         )
         try:
             q.processAllAvailable()

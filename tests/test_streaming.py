@@ -24,7 +24,6 @@ from flink_streaming_demo_spark.streaming.early_trigger import (
 )
 from flink_streaming_demo_spark.streaming.pipelines import (
     streaming_sliding_arrival_count,
-    streaming_total_arrival_count,
     write_foreach_batch_stream,
 )
 from flink_streaming_demo_spark.streaming.sinks import (
@@ -140,7 +139,7 @@ def test_streaming_running_total_converges_to_batch(spark, rides_df):
     sink = InMemoryUpsertSink(["cell"])
     try:
         _run_stream(
-            spark, chunk_dir, streaming_total_arrival_count, sink, "update"
+            spark, chunk_dir, total_arrival_count, sink, "update"
         )
         got = {(d["cell"]): (d["cnt"], d["max_ts"]) for d in sink.snapshot()}
         expected = {
@@ -202,70 +201,6 @@ def test_streaming_early_fire_converges_and_fires_early(spark):
         shutil.rmtree(chunk_dir, ignore_errors=True)
 
 
-def test_tws_early_fire_matches_applyinpandas_form(spark):
-    """The transformWithStateInPandas processor (value state + event-time
-    timer, separate expiry callback) must reproduce the SAME fire
-    sequence — every (cell, window_end, fire_seq, cnt, is_final) row —
-    as the applyInPandasWithState operator and the batch-exact replay.
-
-    transformWithState's driver worker imports google.protobuf for its
-    state protocol; absent from this container (environment-blocked) ->
-    skip, runs wherever protobuf is installed."""
-    pytest.importorskip("google.protobuf")
-    from flink_streaming_demo_spark.streaming.early_trigger import (
-        tws_early_fire_counts,
-    )
-
-    base = datetime(2024, 3, 1, 0, 0, 0)
-    rows = []
-    for i in range(12):  # one cell, 12 END events, 10 passengers each
-        rows.append(
-            (i, base + timedelta(seconds=10 * i), False, -73.9, 40.75, 10)
-        )
-    rows.append((999, base + timedelta(hours=2), False, -73.71, 40.51, 0))
-    rides = spark.createDataFrame(rows, RIDES_SCHEMA)
-    chunk_dir = replay.write_replay_chunks(rides, n_chunks=4, order_col="ts")
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    old = spark.conf.get(provider_key, None)
-    sink = InMemoryUpsertSink(["cell", "window_end", "fire_seq"])
-    try:
-        spark.conf.set(provider_key, rocksdb)
-        _run_stream(
-            spark,
-            chunk_dir,
-            lambda s: tws_early_fire_counts(
-                arrival_events(s.withWatermark("ts", "60 seconds")),
-                threshold=50,
-            ),
-            sink,
-            "append",
-        )
-    finally:
-        if old is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old)
-        shutil.rmtree(chunk_dir, ignore_errors=True)
-    got = {
-        (d["cell"], d["window_end"], d["fire_seq"]):
-            (d["cnt"], d["is_final"])
-        for d in sink.snapshot()
-        if d["cell"] != SENT_CELL
-    }
-    assert any(not f for _, f in got.values()), "expected partial fires"
-    expected = {
-        (r.cell, r.window_end, r.fire_seq): (r.cnt, r.is_final)
-        for r in early_fire_counts(arrival_events(rides), threshold=50)
-        .filter(F.col("cell") != SENT_CELL)
-        .collect()
-    }
-    assert got == expected
-
-
 def test_parquet_upsert_sink_merges_by_key(spark):
     from flink_streaming_demo_spark.streaming.sinks import ParquetUpsertSink
 
@@ -283,129 +218,74 @@ def test_parquet_upsert_sink_merges_by_key(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_upsert_sinks_last_fire_per_key_wins_within_batch(spark):
-    """Reference contract (ElasticsearchUpsertSink.scala:42-83 +
-    EarlyArrivalCount.scala:185-188): a single micro-batch can hold SEVERAL
-    fires for one (cell, window_end) with increasing fire_seq — the LAST
-    fire must win in the store. Rows arrive out of fire order to prove the
-    sinks order by ``order_col``, not by arrival."""
+_TS = datetime(2024, 3, 1, 10, 15, 0)
+
+
+@pytest.mark.parametrize(
+    "batches, expected",
+    [
+        pytest.param(
+            # Reference contract (ElasticsearchUpsertSink.scala:42-83 +
+            # EarlyArrivalCount.scala:185-188): one micro-batch can hold
+            # SEVERAL fires for one (cell, window_end) — the LAST fire
+            # wins, by fire_seq, not by arrival; a later micro-batch then
+            # supersedes the within-batch winner
+            [[(7, 2, 25), (7, 3, 40), (7, 1, 10), (8, 1, 5)], [(7, 4, 55)]],
+            [{7: 40, 8: 5}, {7: 55, 8: 5}],
+            id="last_fire_per_key_wins_within_batch",
+        ),
+        pytest.param(
+            # a NULL fire_seq loses against any non-null fire
+            [[(7, None, 99), (7, 1, 10), (9, None, 3)]],
+            [{7: 10, 9: 3}],
+            id="null_order_col_loses",
+        ),
+        pytest.param(
+            # every fire of key 9 has a NULL order: a real row (the
+            # greatest value tuple) is kept, not a null struct
+            [[(9, None, 3), (9, None, 7), (7, 1, 10)]],
+            [{7: 10, 9: 7}],
+            id="all_orders_null",
+        ),
+        pytest.param(
+            # TIED non-null orders resolve to the greatest value tuple
+            [[(7, 2, 10), (7, 2, 40), (7, 2, 25), (8, 1, 5)]],
+            [{7: 40, 8: 5}],
+            id="tied_nonnull_orders",
+        ),
+    ],
+)
+def test_upsert_sinks_winner_rule(spark, batches, expected):
+    """The in-memory and parquet sinks share one within-batch winner
+    rule (sinks.latest_per_key: order by struct(fire_seq, values), nulls
+    smallest); cross-batch the later micro-batch wins. Each batch runs
+    through both sinks and both states must equal ``expected`` after
+    every batch."""
     from flink_streaming_demo_spark.streaming.sinks import ParquetUpsertSink
 
-    ts = datetime(2024, 3, 1, 10, 15, 0)
-    rows = [  # deliberately NOT in fire_seq order
-        (7, ts, 2, 25),
-        (7, ts, 3, 40),
-        (7, ts, 1, 10),
-        (8, ts, 1, 5),
-    ]
     schema = "cell int, window_end timestamp, fire_seq int, cnt int"
-    batch1 = spark.createDataFrame(rows, schema)
-    # a later micro-batch supersedes the within-batch winner
-    batch2 = spark.createDataFrame([(7, ts, 4, 55)], schema)
-
-    mem = InMemoryUpsertSink(["cell", "window_end"], order_col="fire_seq")
-    mem.foreach_batch(batch1, 0)
-    got = {(d["cell"], d["window_end"]): d["cnt"] for d in mem.snapshot()}
-    assert got == {(7, ts): 40, (8, ts): 5}
-    mem.foreach_batch(batch2, 1)
-    got = {(d["cell"], d["window_end"]): d["cnt"] for d in mem.snapshot()}
-    assert got == {(7, ts): 55, (8, ts): 5}
-
+    key = ["cell", "window_end"]
     d = tempfile.mkdtemp(prefix="upsert_")
     try:
-        pq = ParquetUpsertSink(
-            d + "/kv", ["cell", "window_end"], order_col="fire_seq"
-        )
-        pq.foreach_batch(batch1, 0)
-        got = {(r.cell, r.window_end): r.cnt for r in pq.read(spark).collect()}
-        assert got == {(7, ts): 40, (8, ts): 5}
-        pq.foreach_batch(batch2, 1)
-        got = {(r.cell, r.window_end): r.cnt for r in pq.read(spark).collect()}
-        assert got == {(7, ts): 55, (8, ts): 5}
+        mem = InMemoryUpsertSink(key, order_col="fire_seq")
+        pq = ParquetUpsertSink(d + "/kv", key, order_col="fire_seq")
+        for epoch, (rows, want) in enumerate(zip(batches, expected)):
+            batch = spark.createDataFrame(
+                [(c, _TS, o, n) for c, o, n in rows], schema
+            )
+            mem.foreach_batch(batch, epoch)
+            pq.foreach_batch(batch, epoch)
+            want = {(c, _TS): n for c, n in want.items()}
+            assert {
+                (m["cell"], m["window_end"]): m["cnt"]
+                for m in mem.snapshot()
+            } == want
+            assert {
+                (r.cell, r.window_end): r.cnt
+                for r in pq.read(spark).collect()
+            } == want
     finally:
         shutil.rmtree(d, ignore_errors=True)
-
-
-def test_inmemory_upsert_sink_null_order_col_loses(spark):
-    """NULL order_col must not crash the driver-side sort and must LOSE
-    against any non-null fire (matching max_by's nulls-lose semantics)."""
-    ts = datetime(2024, 3, 1, 10, 15, 0)
-    schema = "cell int, window_end timestamp, fire_seq int, cnt int"
-    batch = spark.createDataFrame(
-        [(7, ts, None, 99), (7, ts, 1, 10), (9, ts, None, 3)], schema
-    )
-    mem = InMemoryUpsertSink(["cell", "window_end"], order_col="fire_seq")
-    mem.foreach_batch(batch, 0)
-    got = {(d["cell"], d["window_end"]): d["cnt"] for d in mem.snapshot()}
-    assert got == {(7, ts): 10, (9, ts): 3}
-
-
-def test_upsert_sinks_agree_when_all_orders_null(spark):
-    """A key whose EVERY fire has a null order_col must keep a real row
-    (greatest value tuple) in BOTH sinks — max_by alone would yield a
-    null struct in the parquet sink while the in-memory sink kept
-    values."""
-    from flink_streaming_demo_spark.streaming.sinks import ParquetUpsertSink
-
-    ts = datetime(2024, 3, 1, 10, 15, 0)
-    schema = "cell int, window_end timestamp, fire_seq int, cnt int"
-    batch = spark.createDataFrame(
-        [(9, ts, None, 3), (9, ts, None, 7), (7, ts, 1, 10)], schema
-    )
-    mem = InMemoryUpsertSink(["cell", "window_end"], order_col="fire_seq")
-    mem.foreach_batch(batch, 0)
-    got_mem = {
-        (d["cell"], d["window_end"]): d["cnt"] for d in mem.snapshot()
-    }
-
-    d = tempfile.mkdtemp(prefix="upsert_")
-    try:
-        pq = ParquetUpsertSink(
-            d + "/kv", ["cell", "window_end"], order_col="fire_seq"
-        )
-        pq.foreach_batch(batch, 0)
-        got_pq = {
-            (r.cell, r.window_end): r.cnt for r in pq.read(spark).collect()
-        }
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    # fallback = greatest value struct: (fire_seq=None, cnt=7) beats
-    # (fire_seq=None, cnt=3) with null-smallest field ordering
-    assert got_mem == got_pq == {(7, ts): 10, (9, ts): 7}
-
-
-def test_upsert_sinks_agree_on_tied_nonnull_orders(spark):
-    """TIED non-null ordering values must resolve identically (greatest
-    value tuple) in BOTH sinks — the parquet sink orders max_by on
-    struct(order_col, values), the in-memory sink's _beats falls through
-    to the value-tuple compare; a bare max_by(values, order_col) would
-    pick an arbitrary row on ties."""
-    from flink_streaming_demo_spark.streaming.sinks import ParquetUpsertSink
-
-    ts = datetime(2024, 3, 1, 10, 15, 0)
-    schema = "cell int, window_end timestamp, fire_seq int, cnt int"
-    batch = spark.createDataFrame(
-        [(7, ts, 2, 10), (7, ts, 2, 40), (7, ts, 2, 25), (8, ts, 1, 5)],
-        schema,
-    )
-    mem = InMemoryUpsertSink(["cell", "window_end"], order_col="fire_seq")
-    mem.foreach_batch(batch, 0)
-    got_mem = {
-        (d["cell"], d["window_end"]): d["cnt"] for d in mem.snapshot()
-    }
-
-    d = tempfile.mkdtemp(prefix="upsert_")
-    try:
-        pq = ParquetUpsertSink(
-            d + "/kv", ["cell", "window_end"], order_col="fire_seq"
-        )
-        pq.foreach_batch(batch, 0)
-        got_pq = {
-            (r.cell, r.window_end): r.cnt for r in pq.read(spark).collect()
-        }
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    assert got_mem == got_pq == {(7, ts): 40, (8, ts): 5}
 
 
 def test_parquet_upsert_sink_premeta_layout_inference(spark):

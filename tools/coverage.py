@@ -28,6 +28,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 PKG = "flink_streaming_demo_spark"
+REGISTRY = f"{PKG}.plans.registry"
 
 
 def _module_file(repo: str, mod: str) -> str | None:
@@ -89,11 +90,16 @@ def import_closure(repo: str, mod: str, memo: dict[str, set[str]]) -> set[str]:
     (r15 finding: coverage.py's own main computed a different
     closure_exec_fp than tools/parity.py for the same module, so
     --assert-reproven rejected ledger entries parity.py had just
-    written)."""
+    written).
+
+    The search stops at ``plans/registry.py``: it is pure wiring and its
+    ``_load_all`` imports every plans module, so following it made every
+    query's closure the whole package. The registry file itself is left
+    out too; its edits never change query semantics."""
     if mod in memo:
         return memo[mod]
     files: set[str] = set()
-    seen = {mod}
+    seen = {mod, REGISTRY}
     queue = [mod]
     while queue:
         cur = queue.pop()
@@ -205,14 +211,11 @@ def closure_exec_fp(repo: str, mod: str,
                     closure_memo: dict[str, set[str]],
                     fp_memo: dict[str, str | None]) -> str:
     """One fingerprint for a query module's whole import closure
-    (registry.py excluded, like stale_files): the ledger key that makes
+    (registry.py excluded, see import_closure): the ledger key that makes
     a parity re-proof verifiably 'against the current code'."""
     import hashlib
 
-    files = sorted(
-        import_closure(repo, mod, closure_memo)
-        - {f"{PKG}/plans/registry.py"}
-    )
+    files = sorted(import_closure(repo, mod, closure_memo))
     parts = []
     for f in files:
         fp = _worktree_exec_fp(repo, f, fp_memo)
@@ -301,11 +304,6 @@ def main() -> int:
         current-round file)."""
         changed = changed_by_round[rnd]
         closure = import_closure(repo, QUERIES[name].__module__, memo)
-        # registry.py is pure wiring (register() stores fn+sql; the
-        # per-round window list reorders registration) — its edits never
-        # change query semantics, and it changes every round by design,
-        # so counting it would mark the whole surface permanently stale.
-        closure = closure - {f"{PKG}/plans/registry.py"}
         return {
             f for f in closure & changed if _exec_changed(f, rnd)
         }
