@@ -153,22 +153,20 @@ register(
 
 # --- MinHash + LSH near-dedup ------------------------------------------------
 
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.minhash_lsh_pairs(
-        _planted_corpus(spark, sf_dir), threshold=0.5
-    )
-
-
-register(
-    "dedup_minhash_lsh",
-    dedup_minhash_lsh,
-    f"""
-    WITH corpus AS ({_PLANTED_SQL}),
-    sigs AS (
+def _sql_minhash_pair_ctes(threshold: float, source: str = "corpus") -> str:
+    """The signatures -> bands -> verified-pairs CTE chain over the
+    (doc_id, text) relation ``source`` (a CTE the caller defines), shared
+    by every MinHash-LSH oracle. Ends in ``cc_pairs`` (id_a < id_b,
+    est_jaccard rounded to 6 places); the threshold applies to the
+    unrounded estimate."""
+    sim = f"""CAST(list_sum(list_transform(generate_series(1, {dedup.N_HASHES}),
+            j -> CASE WHEN sig_a[j] = sig_b[j] THEN 1 ELSE 0 END)) AS DOUBLE)
+            / {float(dedup.N_HASHES)}"""
+    return f"""sigs AS (
         SELECT
             doc_id,
             {dedup.sql_minhash_signature(dedup.sql_shingles('text'))} AS sig
-        FROM corpus
+        FROM {source}
         WHERE len(string_split(text, ' ')) >= {dedup.SHINGLE_N}
     ),
     banded AS (
@@ -181,15 +179,26 @@ register(
         FROM banded a
         JOIN banded b
           ON a.band_key = b.band_key AND a.doc_id < b.doc_id
+    ),
+    cc_pairs AS (
+        SELECT id_a, id_b, ROUND({sim}, 6) AS est_jaccard
+        FROM cand WHERE {sim} >= {threshold}
+    )"""
+
+
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return dedup.minhash_lsh_pairs(
+        _planted_corpus(spark, sf_dir), threshold=0.5
     )
-    SELECT id_a, id_b,
-        ROUND(CAST(list_sum(list_transform(generate_series(1, {dedup.N_HASHES}),
-            j -> CASE WHEN sig_a[j] = sig_b[j] THEN 1 ELSE 0 END)) AS DOUBLE)
-            / {float(dedup.N_HASHES)}, 6) AS est_jaccard
-    FROM cand
-    WHERE CAST(list_sum(list_transform(generate_series(1, {dedup.N_HASHES}),
-            j -> CASE WHEN sig_a[j] = sig_b[j] THEN 1 ELSE 0 END)) AS DOUBLE)
-            / {float(dedup.N_HASHES)} >= 0.5
+
+
+register(
+    "dedup_minhash_lsh",
+    dedup_minhash_lsh,
+    f"""
+    WITH corpus AS ({_PLANTED_SQL}),
+    {_sql_minhash_pair_ctes(0.5)}
+    SELECT id_a, id_b, est_jaccard FROM cc_pairs
     """,
 )
 
@@ -453,30 +462,7 @@ register(
     dedup_clusters,
     f"""
     WITH RECURSIVE corpus AS ({_PLANTED_SQL}),
-    sigs AS (
-        SELECT
-            doc_id,
-            {dedup.sql_minhash_signature(dedup.sql_shingles('text'))} AS sig
-        FROM corpus
-        WHERE len(string_split(text, ' ')) >= {dedup.SHINGLE_N}
-    ),
-    banded AS (
-        SELECT doc_id, sig, unnest({dedup.sql_lsh_band_keys('sig')}) AS band_key
-        FROM sigs
-    ),
-    cand AS (
-        SELECT DISTINCT
-            a.doc_id AS id_a, b.doc_id AS id_b, a.sig AS sig_a, b.sig AS sig_b
-        FROM banded a
-        JOIN banded b
-          ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-    ),
-    cc_pairs AS (
-        SELECT id_a, id_b FROM cand
-        WHERE CAST(list_sum(list_transform(generate_series(1, {dedup.N_HASHES}),
-                j -> CASE WHEN sig_a[j] = sig_b[j] THEN 1 ELSE 0 END)) AS DOUBLE)
-                / {float(dedup.N_HASHES)} >= 0.5
-    ),
+    {_sql_minhash_pair_ctes(0.5)},
     {dedup.SQL_CONNECTED_COMPONENTS}
     SELECT
         c.doc_id,
@@ -539,30 +525,7 @@ register(
             SELECT MIN(doc_id) FROM quality GROUP BY md5(text)
         )
     ),
-    sigs AS (
-        SELECT
-            doc_id,
-            {dedup.sql_minhash_signature(dedup.sql_shingles('text'))} AS sig
-        FROM survivors
-        WHERE len(string_split(text, ' ')) >= {dedup.SHINGLE_N}
-    ),
-    banded AS (
-        SELECT doc_id, sig, unnest({dedup.sql_lsh_band_keys('sig')}) AS band_key
-        FROM sigs
-    ),
-    cand AS (
-        SELECT DISTINCT
-            a.doc_id AS id_a, b.doc_id AS id_b, a.sig AS sig_a, b.sig AS sig_b
-        FROM banded a
-        JOIN banded b
-          ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-    ),
-    cc_pairs AS (
-        SELECT id_a, id_b FROM cand
-        WHERE CAST(list_sum(list_transform(generate_series(1, {dedup.N_HASHES}),
-                j -> CASE WHEN sig_a[j] = sig_b[j] THEN 1 ELSE 0 END)) AS DOUBLE)
-                / {float(dedup.N_HASHES)} >= {PIPE_NEARDUP_EST}
-    ),
+    {_sql_minhash_pair_ctes(PIPE_NEARDUP_EST, "survivors")},
     {dedup.SQL_CONNECTED_COMPONENTS}
     SELECT
         doc_id,
@@ -1852,37 +1815,6 @@ register(
 
 # --- PageRank over the near-dup graph ----------------------------------------
 
-def _sql_minhash_pair_ctes(threshold: float) -> str:
-    """The corpus -> signatures -> bands -> verified-pairs CTE chain
-    shared by the dedup_minhash_lsh / dedup_clusters oracles, ending in
-    ``cc_pairs`` (id_a < id_b)."""
-    sim = f"""CAST(list_sum(list_transform(generate_series(1, {dedup.N_HASHES}),
-            j -> CASE WHEN sig_a[j] = sig_b[j] THEN 1 ELSE 0 END)) AS DOUBLE)
-            / {float(dedup.N_HASHES)}"""
-    return f"""corpus AS ({_PLANTED_SQL}),
-    sigs AS (
-        SELECT
-            doc_id,
-            {dedup.sql_minhash_signature(dedup.sql_shingles('text'))} AS sig
-        FROM corpus
-        WHERE len(string_split(text, ' ')) >= {dedup.SHINGLE_N}
-    ),
-    banded AS (
-        SELECT doc_id, sig, unnest({dedup.sql_lsh_band_keys('sig')}) AS band_key
-        FROM sigs
-    ),
-    cand AS (
-        SELECT DISTINCT
-            a.doc_id AS id_a, b.doc_id AS id_b, a.sig AS sig_a, b.sig AS sig_b
-        FROM banded a
-        JOIN banded b
-          ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-    ),
-    cc_pairs AS (
-        SELECT id_a, id_b FROM cand WHERE {sim} >= {threshold}
-    )"""
-
-
 def graph_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the undirected MinHash-LSH near-dup graph (3 fixed
     iterations, damping 0.85): ranks the planted corpus's duplicate
@@ -1905,7 +1837,8 @@ register(
     "graph_pagerank_neardup",
     graph_pagerank_neardup,
     f"""
-    WITH {_sql_minhash_pair_ctes(0.5)},
+    WITH corpus AS ({_PLANTED_SQL}),
+    {_sql_minhash_pair_ctes(0.5)},
     {graph.sql_pagerank_ctes('cc_pairs')}
     SELECT r{graph.ITERATIONS}.id AS doc_id,
            deg.degree AS degree,
@@ -2251,7 +2184,8 @@ register(
     "decon_split_leakage",
     decon_split_leakage,
     f"""
-    WITH {_sql_minhash_pair_ctes(0.5)},
+    WITH corpus AS ({_PLANTED_SQL}),
+    {_sql_minhash_pair_ctes(0.5)},
     labeled AS (
         SELECT {_sql_split_of('id_a')} AS split_a,
                {_sql_split_of('id_b')} AS split_b
@@ -2332,7 +2266,8 @@ register(
     "decon_split_by_cluster",
     decon_split_by_cluster,
     f"""
-    WITH RECURSIVE {_sql_minhash_pair_ctes(0.5)},
+    WITH RECURSIVE corpus AS ({_PLANTED_SQL}),
+    {_sql_minhash_pair_ctes(0.5)},
     {dedup.SQL_CONNECTED_COMPONENTS},
     membership AS (
         SELECT c.doc_id,
@@ -2451,30 +2386,7 @@ register(
     survivors AS (
         SELECT doc_id, text FROM exact WHERE exact_survivor
     ),
-    sigs AS (
-        SELECT
-            doc_id,
-            {dedup.sql_minhash_signature(dedup.sql_shingles('text'))} AS sig
-        FROM survivors
-        WHERE len(string_split(text, ' ')) >= {dedup.SHINGLE_N}
-    ),
-    banded AS (
-        SELECT doc_id, sig, unnest({dedup.sql_lsh_band_keys('sig')}) AS band_key
-        FROM sigs
-    ),
-    cand AS (
-        SELECT DISTINCT
-            a.doc_id AS id_a, b.doc_id AS id_b, a.sig AS sig_a, b.sig AS sig_b
-        FROM banded a
-        JOIN banded b
-          ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-    ),
-    cc_pairs AS (
-        SELECT id_a, id_b FROM cand
-        WHERE CAST(list_sum(list_transform(generate_series(1, {dedup.N_HASHES}),
-                j -> CASE WHEN sig_a[j] = sig_b[j] THEN 1 ELSE 0 END)) AS DOUBLE)
-                / {float(dedup.N_HASHES)} >= {PIPE_NEARDUP_EST}
-    ),
+    {_sql_minhash_pair_ctes(PIPE_NEARDUP_EST, "survivors")},
     {dedup.SQL_CONNECTED_COMPONENTS},
     dec AS (
         SELECT f.doc_id,

@@ -25,6 +25,8 @@ Output-mode mapping (SURVEY §3):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -267,8 +269,6 @@ def streaming_incremental_dedup(
     index = (bh.localCheckpoint(), bband.localCheckpoint())
 
     def body(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.head(1):
-            return
         # micro-batches are trigger-bounded: always broadcast-size
         verdicts = incremental_dedup_decisions(
             base, batch_df, threshold=threshold, index=index,
@@ -276,7 +276,7 @@ def streaming_incremental_dedup(
         )
         sink.foreach_batch(verdicts, epoch_id)
 
-    return body
+    return _nonempty_batches(body)
 
 
 def write_foreach_batch_stream(stream: DataFrame, body, query_name: str):
@@ -315,6 +315,36 @@ def _require_sink(sink, who: str, name: str, key=None, readable=True):
             f"{who}: {name} key_cols must be {key}, got "
             f"{getattr(sink, 'key_cols', None)}"
         )
+
+
+def _nonempty_batches(body, marker_sink=None):
+    """Wrap a foreachBatch ``body`` so an empty micro-batch does nothing.
+
+    With ``marker_sink`` each epoch is applied at most once, for bodies
+    whose merge SUMs and so double-counts a replayed epoch: the marker
+    directory ``<marker_sink.path>_epochs/epoch=<id>`` is checked before
+    the body runs and written after its last write. The residual unsafe
+    window is a crash between that write and the marker — strictly
+    narrower than no guard, and the same exactness class as any
+    SUM-based streaming aggregate over a non-transactional sink (a
+    production deployment would commit state and marker atomically via
+    a transactional table format)."""
+
+    def run(batch_df: DataFrame, epoch_id: int) -> None:
+        marker = None
+        if marker_sink is not None:
+            marker = os.path.join(
+                f"{marker_sink.path}_epochs", f"epoch={epoch_id}"
+            )
+            if os.path.exists(marker):
+                return
+        if not batch_df.head(1):
+            return
+        body(batch_df, epoch_id)
+        if marker is not None:
+            os.makedirs(marker, exist_ok=True)
+
+    return run
 
 
 def streaming_quality_scores(
@@ -412,27 +442,14 @@ def _streaming_sketch_maintenance(
     identity — checked at construction, because a mis-keyed sink would
     silently collapse state rows into one.
 
-    ``epoch_guard``: for the one NON-idempotent merge (CMS: counters SUM,
-    so re-merging a replayed epoch double-counts), the body records each
-    applied epoch id as a marker directory next to the store and skips a
-    re-delivered epoch. The marker is written AFTER the upsert, so the
-    residual unsafe window is a crash between upsert completion and
-    marker creation — strictly narrower than no guard, and the same
-    exactness class as any SUM-based streaming aggregate over a
-    non-transactional sink (a production deployment would commit state
-    and marker atomically via a transactional table format). The
-    idempotent sketches skip the guard: their replay safety is
+    ``epoch_guard``: for the NON-idempotent merges (CMS and contract
+    counters SUM, so re-merging a replayed epoch double-counts), the
+    body runs behind the epoch replay marker (``_nonempty_batches``).
+    The idempotent sketches skip the guard: their replay safety is
     algebraic, with no window at all."""
     _require_sink(sink, sketch_name, "sink", key=expected_key)
 
     def body(batch_df: DataFrame, epoch_id: int) -> None:
-        import os
-
-        marker = os.path.join(f"{sink.path}_epochs", f"epoch={epoch_id}")
-        if epoch_guard and os.path.exists(marker):
-            return
-        if not batch_df.head(1):
-            return
         # Lazy checkpoint (r16, guide §2.6 / VERDICT r15 #4): the
         # batch partials still feed both the touched-groups probe and
         # the merge exactly once (checkpoint cache), but materialize
@@ -444,8 +461,6 @@ def _streaming_sketch_maintenance(
         # rewrites the parquet they read.
         part = partial_fn(batch_df).localCheckpoint(eager=False)
         if os.path.exists(sink.path):
-            from pyspark.sql import functions as F
-
             touched = part.select(*group_cols).distinct()
             cur = (
                 sink.read(batch_df.sparkSession)
@@ -454,10 +469,8 @@ def _streaming_sketch_maintenance(
             )
             part = merge_fn(cur, part)
         sink.foreach_batch(part, epoch_id)
-        if epoch_guard:
-            os.makedirs(marker, exist_ok=True)
 
-    return body
+    return _nonempty_batches(body, sink if epoch_guard else None)
 
 
 def streaming_hll_distinct(
@@ -810,25 +823,18 @@ def streaming_lateness_monitor(sink, late_dir: str | None = None):
     epoch overwrites its own partition — no duplicate late rows.
 
     Replay safety: the profile merge is SUM-based (non-idempotent), so
-    the body carries the same epoch-marker guard as the CMS maintainer
-    — a re-delivered epoch id is skipped; the marker lands after the
+    the body runs behind the same epoch replay marker as the CMS
+    maintainer (``_nonempty_batches``); the marker lands after the
     watermark write, and a production deployment would commit profile,
     watermark, and marker in one transactional table commit. The
     watermark itself lives in a 1-row parquet next to the store
     (``<path>_wm``): reading it is O(1), writing it rewrites one tiny
     file per trigger."""
-    import os
-
     from flink_streaming_demo_spark.operators import lateness as L
 
     _require_sink(sink, "streaming_lateness_monitor", "sink")
 
     def body(batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(f"{sink.path}_epochs", f"epoch={epoch_id}")
-        if os.path.exists(marker):
-            return
-        if not batch_df.head(1):
-            return
         spark = batch_df.sparkSession
         wm_path = f"{sink.path}_wm"
         wm_us = None
@@ -880,9 +886,8 @@ def streaming_lateness_monitor(sink, late_dir: str | None = None):
             spark.createDataFrame(
                 [(int(max(candidates)),)], "wm_us bigint"
             ).coalesce(1).write.mode("overwrite").parquet(wm_path)
-        os.makedirs(marker, exist_ok=True)
 
-    return body
+    return _nonempty_batches(body, sink)
 
 
 def streaming_contract_counts(
@@ -1020,28 +1025,52 @@ def streaming_bm25_index(postings_sink, lengths_sink):
     """
     from flink_streaming_demo_spark.operators import retrieval as RETR
 
-    who = "streaming_bm25_index"
-    _require_sink(postings_sink, who, "postings_sink", key=["term", "doc_id"])
-    _require_sink(lengths_sink, who, "lengths_sink", key=["doc_id"])
+    return _bm25_index_body(
+        "streaming_bm25_index", postings_sink, lengths_sink,
+        RETR.bm25_postings, ["doc_id"],
+    )
+
+
+def _bm25_index_body(who, postings_sink, lengths_sink, postings_fn, grain):
+    """The one body both BM25 index maintainers run: postings keyed
+    (term, *grain) -> (tf, dl) and lengths keyed grain -> dl, both
+    extracted by ``postings_fn`` from the batch."""
+    _require_sink(postings_sink, who, "postings_sink", key=["term", *grain])
+    _require_sink(lengths_sink, who, "lengths_sink", key=grain)
 
     def body(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.head(1):
-            return
         # Lazy checkpoint + overlapped merges (r16, guide §2.6 /
-        # VERDICT r15 #4): one tokenization pass still feeds both
-        # stores (checkpoint cache; concurrent first access is safe —
+        # VERDICT r15 #4): one extraction pass still feeds both stores
+        # (checkpoint cache; concurrent first access is safe —
         # block-manager puts are per-partition idempotent), but it
         # materializes inside the sinks' own jobs instead of as a
         # separate job per micro-batch, and the two merges touch
         # disjoint stores so they run concurrently.
-        post = RETR.bm25_postings(batch_df).localCheckpoint(eager=False)
+        post = postings_fn(batch_df).localCheckpoint(eager=False)
         _overlap_merges(
             (postings_sink, post),
-            (lengths_sink, post.select("doc_id", "dl").distinct()),
+            (lengths_sink, post.select(*grain, "dl").distinct()),
             epoch_id,
         )
 
-    return body
+    return _nonempty_batches(body)
+
+
+def _bm25_store_frames(spark, postings_sink, lengths_sink, terms, grain):
+    """The (tf, stats) frames the batch BM25 tails derive from the raw
+    corpus, read from the index stores: term-filtered postings (filter
+    pushed into the store scan) and a 1-row stats aggregate over the
+    lengths store."""
+    stats = lengths_sink.read(spark).agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("dl").alias("sum_dl"),
+    )
+    tf = (
+        postings_sink.read(spark)
+        .filter(F.col("term").isin(*terms))
+        .select(*grain, "dl", "term", "tf")
+    )
+    return tf, stats
 
 
 def bm25_topk_view(
@@ -1062,14 +1091,8 @@ def bm25_topk_view(
     from flink_streaming_demo_spark.operators import retrieval as RETR
 
     terms = list(query_terms)
-    stats = lengths_sink.read(spark).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("dl").alias("sum_dl"),
-    )
-    tf = (
-        postings_sink.read(spark)
-        .filter(F.col("term").isin(*terms))
-        .select("doc_id", "dl", "term", "tf")
+    tf, stats = _bm25_store_frames(
+        spark, postings_sink, lengths_sink, terms, ["doc_id"]
     )
     return RETR.bm25_rank(tf, stats, terms, k=k, exclude_id=exclude_id)
 
@@ -1092,14 +1115,8 @@ def bm25_batch_view(
     from flink_streaming_demo_spark.operators import retrieval as RETR
 
     _, union_terms = RETR.check_query_bags(query_bags)
-    stats = lengths_sink.read(spark).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("dl").alias("sum_dl"),
-    )
-    tf = (
-        postings_sink.read(spark)
-        .filter(F.col("term").isin(*union_terms))
-        .select("doc_id", "dl", "term", "tf")
+    tf, stats = _bm25_store_frames(
+        spark, postings_sink, lengths_sink, union_terms, ["doc_id"]
     )
     return RETR.bm25_batch_rank(tf, stats, query_bags, k=k)
 
@@ -1114,28 +1131,10 @@ def streaming_bm25_chunk_index(postings_sink, lengths_sink):
     byte-identically on crash replay — no epoch guard needed."""
     from flink_streaming_demo_spark.operators import retrieval as RETR
 
-    who = "streaming_bm25_chunk_index"
-    _require_sink(postings_sink, who, "postings_sink",
-                  key=["term", "doc_id", "chunk_idx"])
-    _require_sink(lengths_sink, who, "lengths_sink",
-                  key=["doc_id", "chunk_idx"])
-
-    def body(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        # Same shape as streaming_bm25_index: lazy one-pass extraction,
-        # disjoint-store merges overlapped (r16, guide §2.6).
-        post = RETR.bm25_chunk_postings(batch_df).localCheckpoint(
-            eager=False
-        )
-        _overlap_merges(
-            (postings_sink, post),
-            (lengths_sink,
-             post.select("doc_id", "chunk_idx", "dl").distinct()),
-            epoch_id,
-        )
-
-    return body
+    return _bm25_index_body(
+        "streaming_bm25_chunk_index", postings_sink, lengths_sink,
+        RETR.bm25_chunk_postings, ["doc_id", "chunk_idx"],
+    )
 
 
 def bm25_maxp_view(
@@ -1154,14 +1153,8 @@ def bm25_maxp_view(
     from flink_streaming_demo_spark.operators import retrieval as RETR
 
     terms = list(query_terms)
-    stats = lengths_sink.read(spark).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("dl").alias("sum_dl"),
-    )
-    tf = (
-        postings_sink.read(spark)
-        .filter(F.col("term").isin(*terms))
-        .select("doc_id", "chunk_idx", "dl", "term", "tf")
+    tf, stats = _bm25_store_frames(
+        spark, postings_sink, lengths_sink, terms, ["doc_id", "chunk_idx"]
     )
     return RETR.bm25_maxp_rank(tf, stats, terms, k=k)
 
@@ -1202,14 +1195,12 @@ def streaming_ivf_index(cells_sink, centroids):
     cent = centroids.select("centroid_id", "embedding").localCheckpoint()
 
     def body(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.head(1):
-            return
         assigned = SIM.assign_to_centroids(batch_df, cent, 1).select(
             "vec_id", "centroid_id", "embedding", "nrm"
         )
         cells_sink.foreach_batch(assigned, epoch_id)
 
-    return body
+    return _nonempty_batches(body)
 
 
 def ivf_topk_view(
@@ -1240,8 +1231,6 @@ def ivf_topk_view(
     bare isin() raises) and a NEVER-WRITTEN store (a read arriving
     before the first non-empty micro-batch; the maintainer skips empty
     batches, so the path may not exist yet)."""
-    import os
-
     from flink_streaming_demo_spark.operators import similarity as SIM
 
     # Lazy checkpoint (r16, VERDICT r15 #4): the probed-cell collect
@@ -1318,8 +1307,6 @@ def streaming_ivf_dedup_gate(
     Exactly-once decisions would need the sink's epoch guard + a
     store-side epoch column; out of contract here.
     """
-    import os
-
     from flink_streaming_demo_spark.operators import similarity as SIM
 
     # The gate READS cells_sink; the decisions sink only takes keyed
@@ -1333,8 +1320,6 @@ def streaming_ivf_dedup_gate(
     cent = centroids.select("centroid_id", "embedding").localCheckpoint()
 
     def body(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.head(1):
-            return
         spark = batch_df.sparkSession
         store = (
             cells_sink.read(spark)
@@ -1360,7 +1345,7 @@ def streaming_ivf_dedup_gate(
         )
         cells_sink.foreach_batch(assigned, epoch_id)
 
-    return body
+    return _nonempty_batches(body)
 
 
 def reindex_ivf_store(spark, old_sink, new_sink, new_centroids, epoch_id=0):
@@ -1379,8 +1364,6 @@ def reindex_ivf_store(spark, old_sink, new_sink, new_centroids, epoch_id=0):
     broadcast-K assignment — the same cost as the original ingest,
     amortizable by running it as a background batch job while the old
     index keeps serving."""
-    import os
-
     # realpath: trailing-slash or symlink aliases of the same store must
     # not slip past the blue/green guard
     if os.path.realpath(old_sink.path) == os.path.realpath(new_sink.path):
@@ -1442,8 +1425,6 @@ def streaming_crossdoc_dedup_gate(
     One Arrow winnow extraction per batch: the fingerprint rows are
     computed once (localCheckpoint) and feed BOTH the gate's candidate
     join and the index-store merge."""
-    import os
-
     from flink_streaming_demo_spark.operators import dedup as D
 
     who = "streaming_crossdoc_dedup_gate"
@@ -1461,8 +1442,6 @@ def streaming_crossdoc_dedup_gate(
         kwargs["max_gram_df"] = max_gram_df
 
     def body(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.head(1):
-            return
         from flink_streaming_demo_spark.functions.text import (
             winnow_fp_rows,
         )
@@ -1501,7 +1480,7 @@ def streaming_crossdoc_dedup_gate(
             (docs_sink, batch), (fps_sink, inc_fps), epoch_id
         )
 
-    return body
+    return _nonempty_batches(body)
 
 
 def crossdoc_admitted_view(spark, docs_sink, decisions_sink):
@@ -1519,10 +1498,6 @@ def crossdoc_admitted_view(spark, docs_sink, decisions_sink):
     Reads tolerate never-written stores (a view arriving before the
     first non-empty micro-batch) by returning an empty, correctly-typed
     frame — the ivf_topk_view contract."""
-    import os
-
-    from pyspark.sql import functions as F
-
     if not os.path.exists(docs_sink.path):
         return spark.createDataFrame([], "doc_id bigint, text string")
     docs = docs_sink.read(spark).select("doc_id", "text")

@@ -809,7 +809,7 @@ def test_streaming_scd2_equals_batch_closed_intervals(spark, sf_dir):
         events_scd2_type_history,
     )
     from flink_streaming_demo_spark.schemas import load_table
-    from flink_streaming_demo_spark.streaming.scd2 import streaming_scd2
+    from flink_streaming_demo_spark.streaming.sealed import streaming_scd2
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
@@ -1199,7 +1199,7 @@ def test_streaming_throttle_equals_batch(spark, sf_dir):
         throttle_kept_events,
     )
     from flink_streaming_demo_spark.schemas import load_table
-    from flink_streaming_demo_spark.streaming.throttle import (
+    from flink_streaming_demo_spark.streaming.sealed import (
         streaming_throttle,
     )
 
@@ -1238,6 +1238,70 @@ def test_streaming_throttle_equals_batch(spark, sf_dir):
         want = {
             r.event_id for r in throttle_kept_events(events).collect()
         }
+        assert got == want
+    finally:
+        shutil.rmtree(chunk_dir, ignore_errors=True)
+
+
+def test_streaming_throttle_equals_batch_with_null_event_types(spark):
+    """A NULL event_type is one more throttle key: the stream must keep
+    the batch's rows with the key passed through as NULL, not as the
+    string 'None'. Full rows are compared, so a rewritten key shows."""
+    from flink_streaming_demo_spark.operators.throttle import (
+        throttle_kept_events,
+    )
+    from flink_streaming_demo_spark.streaming.sealed import (
+        streaming_throttle,
+    )
+
+    t0 = datetime(2024, 1, 1)
+    rows = [
+        (1, 0, 1, None),
+        (2, 100, 1, None),  # within the gap of event 1: dropped
+        (3, 400, 1, None),
+        (4, 50, 1, "click"),
+        (5, 200, 1, "click"),  # within the gap of event 4: dropped
+        (6, 10, 2, None),
+        (7, 10, 2, "view"),
+        (8, 320, 2, None),
+    ]
+    events = spark.createDataFrame(
+        [(e, t0 + timedelta(seconds=s), u, et) for e, s, u, et in rows]
+        + [(10**12, t0 + timedelta(hours=2), 10**9, "zz_sentinel")],
+        EVENTS_SCHEMA,
+    )
+    chunk_dir = replay.write_replay_chunks(
+        replay.with_delivery_jitter(events, max_delay_secs=60),
+        n_chunks=3,
+        order_col="delivery_ts",
+    )
+    sink = InMemoryUpsertSink(["event_id"])
+    try:
+        stream = replay.read_replay_stream(
+            spark, chunk_dir, EVENTS_SCHEMA, max_files_per_trigger=1
+        )
+        q = write_update_stream(
+            streaming_throttle(stream, watermark_delay="60 seconds"),
+            sink,
+            "throttle_nulls",
+            "append",
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        cols = ("event_id", "user_id", "event_type", "ts")
+        got = {
+            tuple(d[c] for c in cols)
+            for d in sink.snapshot()
+            if d["user_id"] != 10**9
+        }
+        want = {
+            tuple(r[c] for c in cols)
+            for r in throttle_kept_events(events).collect()
+            if r.user_id != 10**9
+        }
+        assert {w[0] for w in want} == {1, 3, 4, 6, 7, 8}
         assert got == want
     finally:
         shutil.rmtree(chunk_dir, ignore_errors=True)
