@@ -1033,23 +1033,27 @@ register(
 def events_scd2_type_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slowly-changing-dimension (type 2) build from the event stream:
     treat each user's event_type as a mutable attribute, keep only the
-    CHANGE rows (value differs from the previous event), and assign each
+    CHANGE rows (the user's first event, or a value that differs from the
+    previous event, NULL included: NULL -> NULL is no change, 'x' -> NULL
+    is one, as in streaming/sealed.py:_scd2_step), and assign each
     change a validity interval [valid_from, valid_to) closed by the next
     change, with version numbers and an is_current flag — the standard
     CDC-to-warehouse-dimension transform.
 
     100 TB shape: one shuffle on user_id; both the change filter
-    (lag != current) and the interval close (lead) are single-pass
-    window scans within the partition — no self-join, no second shuffle
-    (the two windows share partitioning and ordering, so Catalyst plans
-    one sort)."""
+    (first row, or lag distinct from current) and the interval close
+    (lead) are single-pass window scans within the partition — no
+    self-join, no second shuffle (the two windows share partitioning and
+    ordering, so Catalyst plans one sort)."""
     ev = t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    changes = ev.withColumn(
-        "prev_type", F.lag("event_type").over(w)
+    changes = ev.select(
+        "*",
+        F.lag("event_type").over(w).alias("prev_type"),
+        F.row_number().over(w).alias("rn"),
     ).filter(
-        F.col("prev_type").isNull()
-        | (F.col("event_type") != F.col("prev_type"))
+        (F.col("rn") == 1)
+        | ~F.col("event_type").eqNullSafe(F.col("prev_type"))
     )
     w2 = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return changes.select(
@@ -1069,14 +1073,15 @@ register(
     WITH ordered AS (
         SELECT user_id, event_id, event_type,
                CAST(ts AS TIMESTAMP) AS ts,
-               LAG(event_type) OVER w AS prev_type
+               LAG(event_type) OVER w AS prev_type,
+               ROW_NUMBER() OVER w AS rn
         FROM events
         WINDOW w AS (PARTITION BY user_id
                      ORDER BY CAST(ts AS TIMESTAMP), event_id)
     ),
     changes AS (
         SELECT * FROM ordered
-        WHERE prev_type IS NULL OR event_type <> prev_type
+        WHERE rn = 1 OR event_type IS DISTINCT FROM prev_type
     )
     SELECT
         user_id,
@@ -1258,7 +1263,7 @@ def events_temporal_scd2_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts").alias("first_ts"),
         F.max("ts").alias("last_ts"),
         F.sum(
-            (F.col("event_type") != F.col("dim_type")).cast("int")
+            (~F.col("event_type").eqNullSafe(F.col("dim_type"))).cast("int")
         ).cast("bigint").alias("n_mismatched"),
     )
 
@@ -1270,14 +1275,15 @@ register(
     WITH ordered AS (
         SELECT user_id, event_id, event_type,
                CAST(ts AS TIMESTAMP) AS ts,
-               LAG(event_type) OVER w AS prev_type
+               LAG(event_type) OVER w AS prev_type,
+               ROW_NUMBER() OVER w AS rn
         FROM events
         WINDOW w AS (PARTITION BY user_id
                      ORDER BY CAST(ts AS TIMESTAMP), event_id)
     ),
     changes AS (
         SELECT * FROM ordered
-        WHERE prev_type IS NULL OR event_type <> prev_type
+        WHERE rn = 1 OR event_type IS DISTINCT FROM prev_type
     ),
     dim AS (
         SELECT
@@ -1296,7 +1302,8 @@ register(
         CAST(COUNT(*) AS BIGINT) AS n_events,
         MIN(CAST(e.ts AS TIMESTAMP)) AS first_ts,
         MAX(CAST(e.ts AS TIMESTAMP)) AS last_ts,
-        CAST(SUM(CASE WHEN e.event_type <> d.dim_type THEN 1 ELSE 0 END)
+        CAST(SUM(CASE WHEN e.event_type IS DISTINCT FROM d.dim_type
+                      THEN 1 ELSE 0 END)
              AS BIGINT) AS n_mismatched
     FROM events e
     JOIN dim d

@@ -12,6 +12,11 @@ pins the configs every pipeline in this engine assumes:
 * shuffle partitions sized to the local core count for tests; a real cluster
   deployment overrides via ``spark.sql.shuffle.partitions`` (or leaves AQE's
   coalescing to shrink the default).
+* the FileSystem-based streaming checkpoint file manager. On ``file:`` it
+  does the same check-then-rename as Spark's FileContext default without
+  spawning a ``readlink`` process per status call (see ``get_spark``). A
+  deployment whose checkpoints live on HDFS passes the FileContext
+  manager back through ``extra_conf``.
 """
 
 from __future__ import annotations
@@ -52,6 +57,25 @@ def get_spark(
         )
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Streaming offsets/commits/sources logs and the HDFS-backed
+        # state store write through this manager. Spark's FileContext
+        # default, on file: without native libhadoop, spawns a readlink
+        # child process per status call: 1,576 in one perfbench App 2
+        # run (BENCH_NOTES.md), and a traced run on a 4-core host read
+        # state commit 388 -> 20 ms and log commit 79 -> 24 ms with this
+        # manager. It loses nothing on file:. FileContext goes
+        # ChecksumFs -> AbstractFileSystem.renameInternal(src, dst,
+        # overwrite): a check-then-rename (getFileLinkStatus(dst), then
+        # FileAlreadyExistsException), and this manager does the same
+        # exists check, then rename (javap, hadoop-client-api 3.4.2).
+        # LocalFileSystem is a ChecksumFileSystem, so .crc files are
+        # still written. For checkpoints on HDFS, pass
+        # FileContextBasedCheckpointFileManager through ``extra_conf``.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.ui.enabled", "false")

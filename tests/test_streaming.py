@@ -436,6 +436,40 @@ def test_parquet_upsert_sink_rejects_incompatible_layout(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+def test_checkpoint_file_manager_is_pinned_and_keeps_no_overwrite(
+    spark, tmp_path
+):
+    """get_spark pins the FileSystem-based checkpoint file manager
+    (session.py says why). It must keep the guard the offset and commit
+    logs rely on: an atomic create over an existing file fails on close
+    and leaves the first file as it was."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
+    mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing \
+        .CheckpointFileManager.create(
+            Path(str(tmp_path)),
+            spark._jsparkSession.sessionState().newHadoopConf(),
+        )
+    assert (
+        mgr.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+    )
+    batch0 = Path(str(tmp_path / "0"))
+    out = mgr.createAtomic(batch0, False)
+    out.write(1)
+    out.close()
+    out = mgr.createAtomic(batch0, False)
+    out.write(2)
+    with pytest.raises(Py4JJavaError, match="already exists"):
+        out.close()
+    kept = mgr.open(batch0)
+    try:
+        assert kept.read() == 1
+    finally:
+        kept.close()
+
+
 def test_paced_replay_tracks_event_time_spacing(spark):
     """U5 exact: with speedup=60, events 60s apart in event time must
     arrive ~1s apart in wall time, in serving order (reference
@@ -857,6 +891,113 @@ def test_streaming_scd2_equals_batch_closed_intervals(spark, sf_dir):
         }
         assert got == expected
         assert all(not d["is_current"] for d in sink.snapshot())
+    finally:
+        shutil.rmtree(chunk_dir, ignore_errors=True)
+
+
+def test_streaming_scd2_equals_batch_with_null_event_types(spark, tmp_path):
+    """A NULL event_type is a legal SCD2 value: NULL -> NULL is no change,
+    'x' -> NULL and NULL -> 'x' are changes, and a user's first event
+    opens version 1 whatever its type. The stream, the batch builder and
+    the DuckDB twins of both SCD2 queries must agree on that, compared
+    as full rows."""
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__
+    from flink_streaming_demo_spark.schemas import load_table
+    from flink_streaming_demo_spark.streaming.sealed import streaming_scd2
+    from tools import parity
+
+    t0 = datetime(2024, 1, 1)
+    rows = [  # (event_id, seconds after t0, user_id, event_type)
+        (1, 0, 1, None),
+        (2, 10, 1, None),  # NULL -> NULL: no change
+        (3, 20, 1, "a"),
+        (4, 30, 1, None),  # 'a' -> NULL: a change
+        (5, 40, 1, "a"),
+        (6, 50, 1, "a"),
+        (7, 60, 1, "b"),
+        (8, 5, 2, "x"),
+        (9, 15, 2, None),
+        (10, 25, 2, None),
+        (11, 35, 2, "x"),
+        (12, 0, 3, None),
+        (13, 100, 3, None),  # one open NULL version, never closed
+    ]
+    pd.DataFrame(
+        [(e, t0 + timedelta(seconds=s), u, et) for e, s, u, et in rows],
+        columns=["event_id", "ts", "user_id", "event_type"],
+    ).to_parquet(tmp_path / "events.parquet")
+    sf = str(tmp_path)
+    queries = __spark_entry__.queries()
+    cols = (
+        "user_id", "event_type", "version", "valid_from", "valid_to",
+        "is_current",
+    )
+    batch = {
+        tuple(r[c] for c in cols)
+        for r in queries["events_scd2_type_history"](spark, sf).collect()
+    }
+
+    def at(sec):
+        return t0 + timedelta(seconds=sec)
+
+    assert batch == {
+        (1, None, 1, at(0), at(20), False),
+        (1, "a", 2, at(20), at(30), False),
+        (1, None, 3, at(30), at(40), False),
+        (1, "a", 4, at(40), at(60), False),
+        (1, "b", 5, at(60), None, True),
+        (2, "x", 1, at(5), at(15), False),
+        (2, None, 2, at(15), at(35), False),
+        (2, "x", 3, at(35), None, True),
+        (3, None, 1, at(0), None, True),
+    }
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf}/events.parquet')"
+    )
+    for name in ("events_scd2_type_history", "events_temporal_scd2_join"):
+        oracle = con.execute(__spark_entry__.oracle_sql()[name]).df()
+        assert parity.compare(name, queries[name](spark, sf), oracle) == []
+
+    events = load_table(spark, sf, "events").select(
+        "event_id", "ts", "user_id", "event_type"
+    )
+    sentinel = spark.createDataFrame(
+        [(10**12, t0 + timedelta(hours=2), 10**9, "zz_sentinel")],
+        EVENTS_SCHEMA,
+    )
+    chunk_dir = replay.write_replay_chunks(
+        replay.with_delivery_jitter(
+            events.unionByName(sentinel), max_delay_secs=60
+        ),
+        n_chunks=3,
+        order_col="delivery_ts",
+    )
+    sink = InMemoryUpsertSink(["user_id", "version"])
+    try:
+        stream = replay.read_replay_stream(
+            spark, chunk_dir, EVENTS_SCHEMA, max_files_per_trigger=1
+        )
+        q = write_update_stream(
+            streaming_scd2(stream, watermark_delay="60 seconds"),
+            sink,
+            "scd2_nulls",
+            "append",
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        got = {
+            tuple(d[c] for c in cols)
+            for d in sink.snapshot()
+            if d["user_id"] != 10**9
+        }
+        assert got == {r for r in batch if r[4] is not None}
     finally:
         shutil.rmtree(chunk_dir, ignore_errors=True)
 
