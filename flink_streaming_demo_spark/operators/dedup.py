@@ -415,6 +415,52 @@ def drop_viral_keys(df: DataFrame, key_col: str, cap: int) -> DataFrame:
     return df.join(F.broadcast(stop), key_col, "left_anti")
 
 
+def _shingle_pair_counts(sh: DataFrame, id_col: str) -> DataFrame:
+    """Candidate pairs of the (id_col, shingle) frame ``sh`` — every pair
+    sharing >= 1 shingle — with their overlap counts: (id_a, id_b,
+    n_shared, n_a, n_b), id_a < id_b, n_a / n_b the per-doc shingle
+    counts. The candidate body the Jaccard and containment passes share.
+
+    shuffle_hash, not the default sort-merge: both sides are the same
+    narrow (id, shingle) frame, and sorting 2x N rows by a long text key
+    costs more than building a per-partition hash map of one side (sf0.1:
+    full query 7.5 s -> 4.3 s, identical output). The build side stays
+    bounded at scale — rows are narrow, partitions are the session's
+    tuned shuffle parallelism, and the callers' viral-shingle cap bounds
+    any single key's bucket; AQE skew-split also applies to shuffle-hash
+    joins."""
+    counts = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
+    a = sh.alias("a").hint("shuffle_hash")
+    b = sh.alias("b").hint("shuffle_hash")
+    shared = (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .groupBy(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+    )
+    ca = counts.select(
+        F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a")
+    )
+    cb = counts.select(
+        F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b")
+    )
+    return shared.join(ca, "id_a").join(cb, "id_b")
+
+
+def _pair_jaccard() -> Column:
+    return F.round(
+        F.col("n_shared").cast("double")
+        / (F.col("n_a") + F.col("n_b") - F.col("n_shared")).cast("double"),
+        6,
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -422,7 +468,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     min_tokens: int = SHINGLE_N,
     max_shingle_df: int = MAX_SHINGLE_DF,
-    materialize_shingles: bool = False,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for pairs sharing >= 1 non-stop
     shingle.
@@ -438,66 +483,17 @@ def ngram_jaccard_pairs(
     """
     sh_all = shingle_rows(df, id_col, text_col, min_tokens=min_tokens)
     # Stop-shingle filter: document frequency per shingle (shingles are
-    # distinct per doc, so count == df), keep df <= cap. Computed as
-    # groupBy + count — map-side partial aggregation means a viral shingle
-    # contributes ONE partial row per map task, never a hot reducer
-    # partition (the earlier window-count form funneled every row of a
-    # viral shingle into one partition before filtering it out). The stop
-    # list (df > cap) is tiny by construction, so it broadcast-anti-joins
-    # into the candidate path with no extra shuffle on the big side.
-    # ``materialize_shingles``: the filtered shingle frame feeds BOTH
-    # sides of the pair join plus the per-doc counts (4 references), and
-    # each reference otherwise re-scans the corpus and re-runs the
-    # shingle extraction (24 parquet scans flagged by the tightened r12
-    # plan audit back when extraction was the HOF explode; the
-    # registered query passes True — one tokenization pass instead of
-    # four). Opt-in rather than unconditional because localCheckpoint
-    # is an EAGER, non-resilient, token-sized materialization — a
-    # caller that only wants the plan, or that composes this after its
-    # own cut, should not pay it at construction time.
-    # (ngram_containment_pairs below shares the shape; its registered
-    # query stays under the audit limits without the cut.)
-    sh = drop_viral_keys(sh_all, "shingle", max_shingle_df)
-    if materialize_shingles:
-        sh = sh.localCheckpoint(eager=False)
-    counts = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    # shuffle_hash, not the default sort-merge: both sides are the same
-    # narrow (id, shingle) frame, and sorting 2x N rows by a long text
-    # key costs more than building a per-partition hash map of one side
-    # (sf0.1: full query 7.5 s -> 4.3 s, identical output). The build
-    # side stays bounded at scale — rows are narrow, partitions are the
-    # session's tuned shuffle parallelism, and the viral-shingle cap
-    # above bounds any single key's bucket; AQE skew-split also applies
-    # to shuffle-hash joins.
-    a = sh.alias("a").hint("shuffle_hash")
-    b = sh.alias("b").hint("shuffle_hash")
-    shared = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    ca = counts.select(
-        F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a")
-    )
-    cb = counts.select(
-        F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b")
-    )
-    jac = F.round(
-        F.col("n_shared").cast("double")
-        / (F.col("n_a") + F.col("n_b") - F.col("n_shared")).cast("double"),
-        6,
+    # distinct per doc, so count == df), keep df <= cap — see
+    # drop_viral_keys. The filtered shingle frame feeds BOTH sides of the
+    # pair join plus the per-doc counts, and each reference otherwise
+    # re-scans the corpus and re-runs the shingle extraction; the lazy
+    # cut makes it one tokenization pass instead of four.
+    sh = drop_viral_keys(sh_all, "shingle", max_shingle_df).localCheckpoint(
+        eager=False
     )
     return (
-        shared.join(ca, "id_a")
-        .join(cb, "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard"))
+        _shingle_pair_counts(sh, id_col)
+        .select("id_a", "id_b", _pair_jaccard().alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -509,7 +505,6 @@ def ngram_containment_pairs(
     threshold: float = 0.8,
     min_tokens: int = SHINGLE_N,
     max_shingle_df: int = MAX_SHINGLE_DF,
-    materialize_shingles: bool = False,
 ) -> DataFrame:
     """Exact n-gram CONTAINMENT for candidate pairs — the asymmetric
     cousin of ngram_jaccard_pairs for the doc-inside-doc case Jaccard
@@ -518,54 +513,26 @@ def ngram_containment_pairs(
     |small|/|big| ≈ 0, so a Jaccard-thresholded dedup keeps the
     duplicate. Reported as max-containment n_shared / min(|A|, |B|)
     with the Jaccard alongside — a pair with high containment but low
-    Jaccard is precisely the subset-duplicate signature. Identical
-    candidate plan to the Jaccard pass (stop-shingle cap, shuffle_hash
-    self equi-join, per-pair counts; ``materialize_shingles`` plays the
-    same opt-in role — the r12 plan read showed 8 extraction
-    re-derivations without the cut); at 100 TB run on LSH survivors."""
-    sh_all = shingle_rows(df, id_col, text_col, min_tokens=min_tokens)
-    if materialize_shingles:
-        sh_all = sh_all.localCheckpoint(eager=False)
+    Jaccard is precisely the subset-duplicate signature. Same candidate
+    body as the Jaccard pass, but the extraction cut sits before the
+    stop-shingle cap (the plan read showed 8 extraction re-derivations
+    without it); at 100 TB run on LSH survivors."""
+    sh_all = shingle_rows(
+        df, id_col, text_col, min_tokens=min_tokens
+    ).localCheckpoint(eager=False)
     sh = drop_viral_keys(sh_all, "shingle", max_shingle_df)
-    counts = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.alias("a").hint("shuffle_hash")
-    b = sh.alias("b").hint("shuffle_hash")
-    shared = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    ca = counts.select(
-        F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a")
-    )
-    cb = counts.select(
-        F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b")
-    )
     containment = F.round(
         F.col("n_shared").cast("double")
         / F.least("n_a", "n_b").cast("double"),
         6,
     )
-    jac = F.round(
-        F.col("n_shared").cast("double")
-        / (F.col("n_a") + F.col("n_b") - F.col("n_shared")).cast("double"),
-        6,
-    )
     return (
-        shared.join(ca, "id_a")
-        .join(cb, "id_b")
+        _shingle_pair_counts(sh, id_col)
         .select(
             "id_a",
             "id_b",
             containment.alias("containment"),
-            jac.alias("jaccard"),
+            _pair_jaccard().alias("jaccard"),
         )
         .filter(F.col("containment") >= threshold)
     )
@@ -1015,7 +982,6 @@ def winnow_pairs(
     id_col: str = "doc_id",
     min_shared: int = WINNOW_MIN_SHARED,
     max_fp_df: int = MAX_FINGERPRINT_DF,
-    materialize_fps: bool = False,
 ) -> DataFrame:
     """Candidate near-dup pairs from shared winnowed fingerprints — the
     MOSS matching step the fingerprints exist for (Schleimer et al. 2003
@@ -1036,28 +1002,17 @@ def winnow_pairs(
     reaches one hot reducer) and the fingerprint equi-join, whose
     per-key fan-out is capped at max_fp_df^2. Never all-pairs.
 
-    ``materialize_fps=True`` localCheckpoints the extracted (id, fp)
-    rows so the three consumers (stop-list counts, join sides a and b)
-    read the materialized frame instead of re-deriving the extraction —
-    Spark does not reuse the exchange across these branches (the r12
-    plan read: 4 derivations, 12 parquet scans). Opt-in because the
-    fingerprint frame is token-sized (the ngram_jaccard_pairs
-    precedent); the registered query passes True.
+    The extracted (id, fp) rows are cut lazily, so the three consumers
+    (stop-list counts, join sides a and b) read one materialized frame
+    instead of re-deriving the extraction — Spark does not reuse the
+    exchange across these branches (the plan read: 4 derivations, 12
+    parquet scans without the cut).
     """
     from flink_streaming_demo_spark.functions.text import winnow_fp_rows
 
     # vectorized row form — value-identical to exploding winnow_fp_sets
     # but ~15x faster extraction (see functions/text.winnow_fp_rows)
-    fp = winnow_fp_rows(df, text_col, id_col)
-    if materialize_fps:
-        fp = fp.localCheckpoint(eager=False)
-    else:
-        # Library callers that skip the checkpoint still get ONE Arrow
-        # extraction: repartition(fp) plants a shared exchange that the
-        # stop-list groupBy and both join sides reuse (ReusedExchange),
-        # instead of re-running winnow_fp_rows per consumer (r13
-        # ADVICE — the r12 materialization change had dropped this).
-        fp = fp.repartition("fp")
+    fp = winnow_fp_rows(df, text_col, id_col).localCheckpoint(eager=False)
     fp = drop_viral_keys(fp, "fp", max_fp_df)
     a = fp.alias("a").hint("shuffle_hash")
     b = fp.alias("b").hint("shuffle_hash")
@@ -1082,7 +1037,6 @@ def source_overlap_matrix(
     source_col: str = "source",
     min_tokens: int = SHINGLE_N,
     max_shingle_sources: int | None = None,
-    materialize_vocab: bool = False,
 ) -> DataFrame:
     """Pairwise cross-source shingle-overlap matrix: for every source
     pair (a < b), how many distinct n-gram shingles they share and the
@@ -1107,12 +1061,10 @@ def source_overlap_matrix(
     ).distinct()
     if max_shingle_sources is not None:
         sh = drop_viral_keys(sh, "shingle", max_shingle_sources)
-    if materialize_vocab:
-        # the distinct (src, shingle) vocabulary feeds three consumers
-        # (sizes, join sides a and b); opt-in localCheckpoint so they
-        # share one derivation (the winnow_pairs precedent) — the
-        # registered query passes True
-        sh = sh.localCheckpoint(eager=False)
+    # the distinct (src, shingle) vocabulary feeds three consumers
+    # (sizes, join sides a and b); the lazy cut lets them share one
+    # derivation
+    sh = sh.localCheckpoint(eager=False)
     sizes = sh.groupBy("src").agg(F.count(F.lit(1)).alias("n_shingles"))
     a = sh.select(F.col("src").alias("source_a"), "shingle")
     b = sh.select(F.col("src").alias("source_b"), "shingle")
@@ -1489,7 +1441,6 @@ def cross_doc_intervals(
             id_col=id_col,
             min_shared=1,
             max_fp_df=max_fp_df,
-            materialize_fps=True,
         )
         .select("id_a", "id_b")
         .localCheckpoint(eager=False)
@@ -1503,8 +1454,8 @@ def cross_doc_intervals(
         df.join(cand_docs, id_col, "left_semi"), k, text_col, id_col
     )
     # One Arrow extraction feeds three consumers (the stop-list groupBy
-    # and both self-join sides): a token-sized localCheckpoint, the
-    # winnow_pairs materialize_fps precedent — a repartition-planted
+    # and both self-join sides): a token-sized localCheckpoint, as in
+    # winnow_pairs — a repartition-planted
     # shared exchange would still triple the gram-extraction subtree in
     # the initial plan.
     grams = drop_viral_keys(grams.localCheckpoint(eager=False), "gram", max_gram_df)
@@ -1558,7 +1509,6 @@ def cross_doc_spans(
     min_span: int = CROSS_DOC_MIN_SPAN,
     max_fp_df: int = MAX_FINGERPRINT_DF,
     max_gram_df: int = MAX_CROSS_GRAM_DF,
-    intervals: DataFrame | None = None,
 ) -> DataFrame:
     """Maximal removed-span REPORT of cross-doc exact-substring dedup:
     one row per maximal covered span of a lower-priority doc —
@@ -1566,19 +1516,12 @@ def cross_doc_spans(
     spans merged over ALL higher-priority partners (overlapping or
     adjacent intervals coalesce). Detection semantics and scale shape:
     see cross_doc_intervals; the merge is pure keyed window functions
-    (no unpartitioned WindowExec).
-
-    ``intervals`` lets a pipeline running BOTH the report and the strip
-    hand in a materialized ``cross_doc_intervals(df, ...)`` frame
-    (localCheckpoint it first) so the winnow index is paid once — the
-    winnow_pairs materialize_fps precedent; value-identical to the
-    inline path (pinned in tests/test_dedup.py)."""
+    (no unpartitioned WindowExec)."""
     from pyspark.sql import Window as W
 
-    if intervals is None:
-        intervals = cross_doc_intervals(
-            df, text_col, id_col, min_span, max_fp_df, max_gram_df
-        )
+    intervals = cross_doc_intervals(
+        df, text_col, id_col, min_span, max_fp_df, max_gram_df
+    )
     merge_w = (
         W.partitionBy(id_col)
         .orderBy("st", "en")
@@ -1623,7 +1566,6 @@ def cross_doc_strip(
     min_span: int = CROSS_DOC_MIN_SPAN,
     max_fp_df: int = MAX_FINGERPRINT_DF,
     max_gram_df: int = MAX_CROSS_GRAM_DF,
-    intervals: DataFrame | None = None,
 ) -> DataFrame:
     """The CLEANING step of cross-doc exact-substring dedup — the
     deliverable the span report feeds (Lee et al. ExactSubstr: strip
@@ -1644,15 +1586,10 @@ def cross_doc_strip(
     bounded by the doc's matched runs, never corpus-sized) and a
     map-only Arrow pass doing the numpy coverage sweep per doc —
     O(tokens + intervals), the strip_dup_spans finish kernel
-    generalized to variable-length intervals.
-
-    ``intervals``: see cross_doc_spans — a report+clean pipeline hands
-    in one materialized ``cross_doc_intervals`` frame and pays the
-    winnow index once."""
-    if intervals is None:
-        intervals = cross_doc_intervals(
-            df, text_col, id_col, min_span, max_fp_df, max_gram_df
-        )
+    generalized to variable-length intervals."""
+    intervals = cross_doc_intervals(
+        df, text_col, id_col, min_span, max_fp_df, max_gram_df
+    )
     doc_iv = intervals.groupBy(id_col).agg(
         F.sort_array(F.collect_list(F.struct("st", "en"))).alias("ivals")
     )

@@ -122,7 +122,6 @@ def bm25_scores(
     k1: float = BM25_K1,
     b: float = BM25_B,
     id_cols: Sequence[str] = ("doc_id",),
-    dfreq: DataFrame | None = None,
 ) -> DataFrame:
     """BM25 scoring over prepared frames, generic in the unit of
     retrieval (document, chunk, ...).
@@ -132,17 +131,14 @@ def bm25_scores(
     units. Returns id_cols + (n_terms, score); only units matching
     >= 1 query term appear. df counts units (for chunk retrieval that
     is chunk frequency — the standard choice when the chunk corpus IS
-    the index); pass ``dfreq`` (term, df) explicitly when ``tf`` rows
-    are NOT one-per-(unit, term) — the batched path joins a query table
-    into tf first, which would inflate a row-count df. The per-term
+    the index), so ``tf`` rows must be one per (unit, term). The per-term
     contributions are pivoted to columns and summed in FIXED query-term
     order (cross-engine float discipline).
     """
     terms = _check_terms(query_terms)
     ids = list(id_cols)
     tf = tf.select(*ids, "dl", "term", "tf")
-    if dfreq is None:
-        dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     scored = tf.join(F.broadcast(dfreq), "term").crossJoin(F.broadcast(stats))
     per_term = scored.select(
         *ids, "term", _term_score_col(k1, b).alias("s")

@@ -193,8 +193,6 @@ def exact_global_rank(
     desc: bool = False,
     n_chunks: int = 16,
     out_col: str = "rank",
-    chunk_bounds: str = "range",
-    quantile_rel_err: float = 0.001,
     count_col: str | None = None,
 ) -> DataFrame:
     """``ROW_NUMBER() OVER (ORDER BY order_col [DESC], tiebreak_col)``
@@ -232,17 +230,11 @@ def exact_global_rank(
     mis-chunked; routing NaNs to the extreme chunk on the opposite side
     from NULLs and excluding NaN from the min/max bounds fixes both.
 
-    Skew: the default ``chunk_bounds="range"`` balances work only when
-    the order column is spread across its [min, max] span; pass
-    ``chunk_bounds="quantile"`` for skewed distributions — boundaries
-    come from ``approxQuantile`` (one extra pass at plan-build time,
-    n_chunks-1 doubles to the driver) so chunks are near-equal-count
-    regardless of the value distribution. Chunk membership is still a
-    pure monotone expression of the order value (count of boundaries
-    <= o), so equal values share a chunk and the rank stays exact.
-    The one shape neither mode can spread is a single massively-tied
-    value (ties must share a chunk for correctness): that run's
-    row_number is a single-task sort by construction.
+    Skew: value-range chunks balance work only when the order column
+    is spread across its [min, max] span; a skewed column packs most
+    rows into few chunks (the rank stays exact, the sort just runs in
+    fewer tasks). A single massively-tied value (ties must share a
+    chunk for correctness) is a single-task sort by construction.
 
     ``count_col``: when set, the output also carries the total row
     count under that name (the bounds agg computes it anyway) —
@@ -265,35 +257,17 @@ def exact_global_rank(
     # the within-chunk tiebreak ordering matches the built-in sort.
     null_chunk = F.lit(n_chunks if desc else -1)
     nan_chunk = F.lit(-1 if desc else n_chunks)
-    if chunk_bounds == "quantile":
-        cuts = df.select(o.alias("_gn_o")).approxQuantile(
-            "_gn_o",
-            [i / n_chunks for i in range(1, n_chunks)],
-            quantile_rel_err,
-        )
-        barr = F.array(*[F.lit(float(b)) for b in cuts])
-        value_chunk = F.aggregate(
-            barr,
-            F.lit(0),
-            lambda acc, b: acc + F.when(o >= b, 1).otherwise(0),
-        )
-    elif chunk_bounds == "range":
-        value_chunk = (
-            F.when(
-                F.col("_gn_max") > F.col("_gn_min"),
-                F.least(
-                    F.lit(n_chunks - 1),
-                    F.floor(
-                        (o - F.col("_gn_min"))
-                        / (F.col("_gn_max") - F.col("_gn_min"))
-                        * n_chunks
-                    ),
-                ),
-            )
-            .otherwise(F.lit(0))
-        )
-    else:
-        raise ValueError(f"chunk_bounds must be range|quantile: {chunk_bounds}")
+    value_chunk = F.when(
+        F.col("_gn_max") > F.col("_gn_min"),
+        F.least(
+            F.lit(n_chunks - 1),
+            F.floor(
+                (o - F.col("_gn_min"))
+                / (F.col("_gn_max") - F.col("_gn_min"))
+                * n_chunks
+            ),
+        ),
+    ).otherwise(F.lit(0))
     chunked = df.crossJoin(F.broadcast(bounds)).withColumn(
         "_gn_chunk",
         F.when(o_raw.isNull(), null_chunk)
@@ -339,8 +313,6 @@ def exact_global_ntile(
     desc: bool = False,
     n_chunks: int = 16,
     out_col: str = "tile",
-    chunk_bounds: str = "range",
-    quantile_rel_err: float = 0.001,
 ) -> DataFrame:
     """``NTILE(tiles) OVER (ORDER BY order_col [DESC], tiebreak_col)``
     with NO single-partition window — bit-identical to the SQL form.
@@ -350,8 +322,7 @@ def exact_global_ntile(
     ``exact_global_rank``, which this wraps. NTILE is then a
     closed-form expression of (rank, n_rows): the first ``n % tiles``
     buckets hold ``n // tiles + 1`` rows, the rest ``n // tiles`` —
-    exactly ANSI NTILE's spill rule. Current call sites (RFM scores)
-    are well-spread under the default ``chunk_bounds="range"``.
+    exactly ANSI NTILE's spill rule.
     """
     ranked = exact_global_rank(
         df,
@@ -360,8 +331,6 @@ def exact_global_ntile(
         desc=desc,
         n_chunks=n_chunks,
         out_col="_gn_rank",
-        chunk_bounds=chunk_bounds,
-        quantile_rel_err=quantile_rel_err,
         count_col="_gn_total",
     )
     n, r = F.col("_gn_total"), F.col("_gn_rank")

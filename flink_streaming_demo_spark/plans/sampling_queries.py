@@ -221,37 +221,20 @@ register(
 _QUANTILES = (0.25, 0.5, 0.75, 0.9)
 
 
-#: approx_percentile accuracy for the scale path: error <= 1/accuracy of
-#: the rank, i.e. rank error <= n/10000 rows per group.
-_APPROX_PCT_ACCURACY = 10000
-
-
-def source_length_quantiles(
-    spark: SparkSession, sf_dir: str, exact: bool = True
-) -> DataFrame:
+def source_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Doc-length quantiles per source — the length-distribution report a
     data recipe is tuned against.
 
-    ``exact=True`` (default, and what the oracle checks) uses the EXACT
-    ``percentile`` aggregate (linear interpolation): cross-engine
-    hash-comparable, and per-group row counts (corpus/5) sort comfortably
-    within a task. ``exact=False`` is the true-100 TB path:
-    ``approx_percentile`` (Greenwald-Khanna sketch, mergeable across
-    partitions — per-group memory is O(accuracy·log n), never the group's
-    rows), with rank error <= n/accuracy; it returns a nearest-rank value
-    rather than an interpolated one, so results are tolerance-checked
-    against the exact path in tests, not hash-compared."""
+    Uses the EXACT ``percentile`` aggregate (linear interpolation):
+    cross-engine hash-comparable, and per-group row counts (corpus/5)
+    sort comfortably within a task. A true-100 TB corpus would swap in
+    ``percentile_approx`` (a mergeable sketch, per-group memory
+    independent of the group's rows), which returns a nearest-rank value
+    rather than an interpolated one and so is not hash-comparable."""
     docs = t(spark, sf_dir, "documents")
-    if exact:
-        pct = F.percentile(
-            F.col("n_chars").cast("double"), F.lit(list(_QUANTILES))
-        )
-    else:
-        pct = F.percentile_approx(
-            F.col("n_chars").cast("double"),
-            F.lit(list(_QUANTILES)),
-            F.lit(_APPROX_PCT_ACCURACY),
-        )
+    pct = F.percentile(
+        F.col("n_chars").cast("double"), F.lit(list(_QUANTILES))
+    )
     cols = [
         F.round(F.element_at(pct, i + 1).cast("double"), 6).alias(
             f"p{int(q * 100)}_chars"

@@ -209,7 +209,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.ngram_jaccard_pairs(
         _planted_corpus(spark, sf_dir),
         threshold=0.5,
-        materialize_shingles=True,
     )
 
 
@@ -674,9 +673,7 @@ def dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MOSS candidate pairs: docs sharing >= 3 distinct (non-stop)
     winnowed fingerprints over the planted corpus. The local-overlap
     near-dup family — see operators/dedup.winnow_pairs."""
-    return dedup.winnow_pairs(
-        _planted_corpus(spark, sf_dir), materialize_fps=True
-    )
+    return dedup.winnow_pairs(_planted_corpus(spark, sf_dir))
 
 
 register(
@@ -1514,7 +1511,6 @@ def decon_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.source_overlap_matrix(
         docs,
         max_shingle_sources=_OVERLAP_MAX_SOURCES,
-        materialize_vocab=True,
     )
 
 
@@ -2241,8 +2237,7 @@ def decon_split_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # split feeds both sides of the cells join; it is CORPUS-sized, so
     # no checkpoint — a planted hash exchange lets ReusedExchange
-    # compute the label join once (the winnow_pairs repartition
-    # precedent).
+    # compute the label join once.
     split = membership.select(
         "doc_id",
         sampling.hash_split(F.col("cluster_id")).alias("split"),
@@ -2454,9 +2449,7 @@ def _ngram_rows(docs: DataFrame, n: int) -> DataFrame:
     )
 
 
-def strip_dup_spans(
-    docs: DataFrame, n: int = SPAN_N, materialize_grams: bool = False
-) -> DataFrame:
+def strip_dup_spans(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     """Per document: count and strip maximal cross-document duplicated
     token spans.
 
@@ -2476,15 +2469,11 @@ def strip_dup_spans(
     join back to documents is an equi-join on gram whose output is
     bounded by gram occurrences (linear in corpus size); span merging
     and stripping run as a numpy interval sweep per doc (O(tokens +
-    starts) instead of the exists-HOF's O(tokens * starts)).
-    ``materialize_grams=True`` localCheckpoints the token-sized gram
-    rows so dup detection and the coverage join share one derivation
-    (the winnow_pairs/ngram_jaccard precedent); the registered query
-    passes True.
+    starts) instead of the exists-HOF's O(tokens * starts)). The
+    token-sized gram rows are cut lazily so dup detection and the
+    coverage join share one derivation.
     """
-    doc_grams = _ngram_rows(docs, n)
-    if materialize_grams:
-        doc_grams = doc_grams.localCheckpoint(eager=False)
+    doc_grams = _ngram_rows(docs, n).localCheckpoint(eager=False)
     # Grams occurring in >= 2 distinct docs (two-level agg: partial
     # (gram, doc) distinct-ing, then gram-level doc count).
     dup_grams = (
@@ -2578,7 +2567,7 @@ def strip_dup_spans(
 
 def text_strip_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    return strip_dup_spans(docs, materialize_grams=True)
+    return strip_dup_spans(docs)
 
 
 register(
@@ -3133,9 +3122,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.py:ngram_containment_pairs)."""
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = docs.unionAll(_chunk_leg(docs))
-    return dedup.ngram_containment_pairs(
-        corpus, threshold=0.8, materialize_shingles=True
-    )
+    return dedup.ngram_containment_pairs(corpus, threshold=0.8)
 
 
 register(

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_streaming_demo_spark.functions.money import money_sum, sql_money_sum
 from flink_streaming_demo_spark.plans.registry import register
 from flink_streaming_demo_spark.schemas import load_table as t
 
@@ -185,9 +186,7 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Adaptation: the reduced customer table has no address/phone/comment, so
     the output carries (custkey, name, nation, mktsegment, acctbal).
-    Revenue is summed as DECIMAL(28,8), exact and order-independent: a
-    double SUM can land on a half cent and round either way depending on
-    summation order.
+    Revenue is a money sum (``functions.money.money_sum``).
     Scale: customer/nation broadcast; orderkey shuffle; top-20 via
     TakeOrdered (per-partition top-k), not a global sort.
     """
@@ -206,15 +205,9 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = joined.groupBy(
         "c_custkey", "c_name", "c_acctbal", "n_name", "c_mktsegment"
     ).agg(
-        F.round(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount")))
-                .cast("decimal(28,8)")
-            ),
-            2,
-        )
-        .cast("double")
-        .alias("revenue")
+        money_sum(
+            F.col("l_extendedprice") * (1 - F.col("l_discount"))
+        ).alias("revenue")
     )
     return agg.orderBy(F.desc("revenue"), F.asc("c_custkey")).limit(20)
 
@@ -222,15 +215,14 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 register(
     "tpch_q10_returned_items",
     tpch_q10_returned_items,
-    """
+    f"""
     SELECT
         c_custkey,
         c_name,
         c_acctbal,
         n_name,
         c_mktsegment,
-        CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount)
-                            AS DECIMAL(28,8))), 2) AS DOUBLE) AS revenue
+        {sql_money_sum("l_extendedprice * (1 - l_discount)")} AS revenue
     FROM lineitem
     JOIN orders ON l_orderkey = o_orderkey
     JOIN customer ON o_custkey = c_custkey

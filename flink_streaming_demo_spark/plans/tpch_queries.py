@@ -7,7 +7,8 @@ physical strategy. Scale stance per query is noted inline (broadcast vs
 shuffle join, partial aggregation, top-k without global sort).
 
 Float determinism: SUM/AVG over doubles is addition-order-dependent, so
-every double aggregate is wrapped in ROUND(..., 2|6) on BOTH sides; raw
+every double aggregate is wrapped in ROUND(..., 2|6) on BOTH sides, and
+the headline money sums go through ``functions.money.money_sum``; raw
 (non-aggregated) doubles are passed through untouched (bit-identical).
 """
 
@@ -16,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flink_streaming_demo_spark.functions.money import money_sum, sql_money_sum
 from flink_streaming_demo_spark.plans.registry import register
 from flink_streaming_demo_spark.schemas import load_table as t
 
@@ -32,17 +34,14 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
+            money_sum(F.col("l_extendedprice")).alias("sum_base_price"),
+            money_sum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount"))
             ).alias("sum_disc_price"),
-            F.round(
-                F.sum(
-                    F.col("l_extendedprice")
-                    * (1 - F.col("l_discount"))
-                    * (1 + F.col("l_tax"))
-                ),
-                2,
+            money_sum(
+                F.col("l_extendedprice")
+                * (1 - F.col("l_discount"))
+                * (1 + F.col("l_tax"))
             ).alias("sum_charge"),
             F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
             F.round(F.avg("l_extendedprice"), 6).alias("avg_price"),
@@ -55,14 +54,15 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 register(
     "tpch_q1_pricing_summary",
     tpch_q1_pricing_summary,
-    """
+    f"""
     SELECT
         l_returnflag,
         l_linestatus,
         ROUND(SUM(l_quantity), 2) AS sum_qty,
-        ROUND(SUM(l_extendedprice), 2) AS sum_base_price,
-        ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-        ROUND(SUM(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2)
+        {sql_money_sum("l_extendedprice")} AS sum_base_price,
+        {sql_money_sum("l_extendedprice * (1 - l_discount)")}
+            AS sum_disc_price,
+        {sql_money_sum("l_extendedprice * (1 - l_discount) * (1 + l_tax)")}
             AS sum_charge,
         ROUND(AVG(l_quantity), 6) AS avg_qty,
         ROUND(AVG(l_extendedprice), 6) AS avg_price,
@@ -98,8 +98,8 @@ def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders, li.l_orderkey == orders.o_orderkey
     ).join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
     agg = joined.groupBy("l_orderkey", "o_orderdate", "o_orderpriority").agg(
-        F.round(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
+        money_sum(
+            F.col("l_extendedprice") * (1 - F.col("l_discount"))
         ).alias("revenue")
     )
     return agg.orderBy(F.desc("revenue"), F.asc("l_orderkey")).limit(10)
@@ -108,12 +108,12 @@ def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 register(
     "tpch_q3_shipping_priority",
     tpch_q3_shipping_priority,
-    """
+    f"""
     SELECT
         l_orderkey,
         CAST(o_orderdate AS TIMESTAMP) AS o_orderdate,
         o_orderpriority,
-        ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
+        {sql_money_sum("l_extendedprice * (1 - l_discount)")} AS revenue
     FROM lineitem
     JOIN orders ON l_orderkey = o_orderkey
     JOIN customer ON o_custkey = c_custkey
@@ -154,8 +154,8 @@ def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame
         .join(F.broadcast(reg), nat.n_regionkey == reg.r_regionkey)
     )
     return joined.groupBy("n_name").agg(
-        F.round(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
+        money_sum(
+            F.col("l_extendedprice") * (1 - F.col("l_discount"))
         ).alias("revenue")
     )
 
@@ -163,10 +163,10 @@ def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame
 register(
     "tpch_q5_local_supplier_volume",
     tpch_q5_local_supplier_volume,
-    """
+    f"""
     SELECT
         n_name,
-        ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
+        {sql_money_sum("l_extendedprice * (1 - l_discount)")} AS revenue
     FROM lineitem
     JOIN orders ON l_orderkey = o_orderkey
     JOIN supplier ON l_suppkey = s_suppkey

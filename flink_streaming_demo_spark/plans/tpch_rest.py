@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flink_streaming_demo_spark.functions.money import money_sum, sql_money_sum
 from flink_streaming_demo_spark.plans.registry import register
 from flink_streaming_demo_spark.schemas import load_table as t
 
@@ -189,9 +190,7 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Profit on 'red' parts per supplier nation per order year.
 
     Adaptation: no ps_supplycost, so cost = 0.8 * p_retailprice * quantity.
-    Per-row profits are summed as DECIMAL(28,8), exact and
-    order-independent: a double SUM can land on a half cent and round
-    either way depending on summation order (as in Q11).
+    Profit is a money sum (``functions.money.money_sum``).
 
     Spark plan: part (filtered by name) and supplier/nation broadcast into
     the lineitem scan; the one big shuffle is lineitem joins orders on
@@ -213,18 +212,10 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("o_orderdate").alias("o_year"),
         )
         .agg(
-            F.round(
-                F.sum(
-                    (
-                        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-                        - F.lit(0.8) * F.col("p_retailprice")
-                        * F.col("l_quantity")
-                    ).cast("decimal(28,8)")
-                ),
-                2,
-            )
-            .cast("double")
-            .alias("sum_profit")
+            money_sum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount"))
+                - F.lit(0.8) * F.col("p_retailprice") * F.col("l_quantity")
+            ).alias("sum_profit")
         )
         .orderBy("nation", F.desc("o_year"))
     )
@@ -233,12 +224,11 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 register(
     "tpch_q9_product_profit",
     tpch_q9_product_profit,
-    """
+    f"""
     SELECT n_name AS nation,
            CAST(YEAR(o_orderdate) AS INT) AS o_year,
-           CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount)
-                               - 0.8 * p_retailprice * l_quantity
-                               AS DECIMAL(28,8))), 2) AS DOUBLE)
+           {sql_money_sum("l_extendedprice * (1 - l_discount)"
+                          " - 0.8 * p_retailprice * l_quantity")}
                AS sum_profit
     FROM lineitem
     JOIN part ON p_partkey = l_partkey

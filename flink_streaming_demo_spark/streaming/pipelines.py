@@ -1390,9 +1390,6 @@ def streaming_crossdoc_dedup_gate(
     docs_sink,
     fps_sink,
     decisions_sink,
-    min_span: int | None = None,
-    max_fp_df: int | None = None,
-    max_gram_df: int | None = None,
 ):
     """Gate-then-ingest foreachBatch body for cross-document
     exact-substring dedup — the LEXICAL twin of
@@ -1433,14 +1430,6 @@ def streaming_crossdoc_dedup_gate(
     _require_sink(decisions_sink, who, "decisions_sink", key=["doc_id"],
                   readable=False)
 
-    kwargs = {}
-    if min_span is not None:
-        kwargs["min_span"] = min_span
-    if max_fp_df is not None:
-        kwargs["max_fp_df"] = max_fp_df
-    if max_gram_df is not None:
-        kwargs["max_gram_df"] = max_gram_df
-
     def body(batch_df: DataFrame, epoch_id: int) -> None:
         from flink_streaming_demo_spark.functions.text import (
             winnow_fp_rows,
@@ -1460,7 +1449,7 @@ def streaming_crossdoc_dedup_gate(
         )
         inc_fps = winnow_fp_rows(batch).localCheckpoint(eager=False)
         decisions = D.cross_doc_gate_decisions(
-            base_docs, base_fps, batch, incoming_fps=inc_fps, **kwargs
+            base_docs, base_fps, batch, incoming_fps=inc_fps
         )
         # decisions must be materialized BEFORE the store merges mutate
         # the parquet they are derived from; the lazy checkpoint keeps

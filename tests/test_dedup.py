@@ -704,28 +704,6 @@ def test_cross_doc_strip_fixture(spark):
     }
 
 
-def test_cross_doc_materialized_intervals_handoff(spark, sf_dir):
-    """The opt-in materialized-intervals handoff (r14 verdict #4): a
-    pipeline running BOTH the span report and the strip hands one
-    localCheckpointed cross_doc_intervals frame to both consumers and
-    pays the winnow index once — the results must be value-identical
-    to each consumer's inline path."""
-    from flink_streaming_demo_spark.plans.text_queries import (
-        _planted_corpus,
-    )
-
-    corpus = _planted_corpus(spark, sf_dir)
-    ivals = dedup.cross_doc_intervals(corpus).localCheckpoint()
-    for inline, handed in (
-        (dedup.cross_doc_spans(corpus),
-         dedup.cross_doc_spans(corpus, intervals=ivals)),
-        (dedup.cross_doc_strip(corpus),
-         dedup.cross_doc_strip(corpus, intervals=ivals)),
-    ):
-        assert inline.exceptAll(handed).count() == 0
-        assert handed.exceptAll(inline).count() == 0
-
-
 def test_cross_doc_spans_min_span_50_fixture(spark):
     """Deterministic pin at the Lee-et-al production operating point
     (min_span ~ 50, r14 verdict #6): a 55-token run shared with a

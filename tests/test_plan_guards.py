@@ -350,33 +350,6 @@ def test_throttle_is_partition_fold_not_per_group(spark, sf_dir):
     assert "Sort" in plan  # the within-partition (key, ts, id) sort
 
 
-def test_winnow_pairs_library_path_shares_one_extraction(spark):
-    """winnow_pairs without materialize_fps (the library-caller default)
-    must still run the Arrow fingerprint extraction ONCE: the
-    repartition(fp) plants a shared exchange that the stop-list groupBy
-    and both join sides reuse (r13 ADVICE — the r12 checkpoint change
-    had dropped it, silently re-running the extraction per consumer).
-    Executed (not just planned) because AQE only surfaces
-    ReusedExchange in the final adaptive plan."""
-    from flink_streaming_demo_spark.operators.dedup import winnow_pairs
-
-    docs = spark.createDataFrame(
-        [
-            (i, "alpha beta gamma delta epsilon zeta eta theta " * 3
-                + str(i))
-            for i in range(20)
-        ],
-        "doc_id long, text string",
-    )
-    df = winnow_pairs(docs)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ReusedExchange" in plan, (
-        "non-materialized winnow_pairs lost its shared fingerprint "
-        "exchange — the Arrow extraction re-runs per consumer"
-    )
-
-
 def test_plan_snapshot_artifact_diffs_against_anchor(tmp_path):
     """``tools/plans.py snapshot`` writes a bench-JSON-shaped artifact
     whose plan_fingerprint/plan_nodes maps ``diff`` accepts. Shape-only

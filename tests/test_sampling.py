@@ -178,43 +178,6 @@ def test_pack_greedy_bounds(spark):
     assert sum(len(v) for v in bins.values()) == 50
 
 
-def test_length_quantiles_approx_within_rank_tolerance(spark, sf_dir):
-    """The approx_percentile scale path of source_length_quantiles must
-    land within its documented rank tolerance of the data: for each
-    (source, q) the returned value's rank interval must intersect
-    q*n +/- (n/accuracy + 1). The exact path stays the oracle-checked
-    default; this pins the swap-in path's contract."""
-    from flink_streaming_demo_spark.plans.sampling_queries import (
-        _APPROX_PCT_ACCURACY,
-        _QUANTILES,
-        source_length_quantiles,
-    )
-    from flink_streaming_demo_spark.schemas import load_table
-
-    approx = {
-        r["source"]: r.asDict()
-        for r in source_length_quantiles(spark, sf_dir, exact=False).collect()
-    }
-    lengths: dict[str, list[int]] = {}
-    for r in load_table(spark, sf_dir, "documents").select(
-        "source", "n_chars"
-    ).collect():
-        lengths.setdefault(r.source, []).append(r.n_chars)
-    assert set(approx) == set(lengths)
-    for source, vals in lengths.items():
-        vals.sort()
-        n = len(vals)
-        err = n / _APPROX_PCT_ACCURACY + 1
-        for q in _QUANTILES:
-            v = approx[source][f"p{int(q * 100)}_chars"]
-            count_lt = sum(1 for x in vals if x < v)
-            count_le = sum(1 for x in vals if x <= v)
-            # the value must actually occur in the group's data
-            assert count_le > count_lt, (source, q, v)
-            assert count_lt <= q * n + err, (source, q, v)
-            assert count_le >= q * n - err, (source, q, v)
-
-
 def test_temperature_weights_flatten_mixture(spark, sf_dir):
     """α=0.5 must pull every source's share toward uniform: sources
     under the uniform share gain, sources over it lose; shares stay a
@@ -274,8 +237,8 @@ def test_weighted_topk_matches_brute_force(spark, sf_dir):
 def test_exact_global_ntile_matches_builtin(spark):
     """exact_global_ntile is bit-identical to NTILE OVER (ORDER BY ...)
     on adversarial shapes: heavy ties, n % tiles != 0, n < tiles, desc,
-    negative values — while its plan contains no single-partition
-    window (the whole point)."""
+    negative values, a skewed column — while its plan contains no
+    single-partition window (the whole point)."""
     import random
 
     from pyspark.sql import Window
@@ -288,6 +251,10 @@ def test_exact_global_ntile_matches_builtin(spark):
         (3, 4, [1, 1, 2], False),              # n < tiles
         (64, 4, [5], True),                    # ALL tied -> pure tiebreak
         (50, 3, [x / 7.0 for x in range(9)], False),  # doubles
+        # skewed: values 2^k crowd the bottom of the [min, max] span,
+        # so one range chunk holds most rows
+        (300, 7, [float(2 ** k) for k in range(24)], False),
+        (300, 7, [float(2 ** k) for k in range(24)], True),
     ]
     for n_rows, tiles, pool, desc in cases:
         rows = [(i, float(rng.choice(pool))) for i in range(n_rows)]
@@ -362,62 +329,6 @@ def test_exact_global_ntile_ranks_nans_like_builtin(spark):
             got["t"] != expect["t"]
         ).count()
         assert mism == 0, desc
-
-
-def test_exact_global_ntile_quantile_bounds_match_and_balance(spark):
-    """chunk_bounds='quantile' must (a) still be bit-identical to the
-    built-in NTILE on a heavily skewed order column, and (b) actually
-    balance the chunks where range-chunking collapses: value ~ 2^i
-    concentrates 90%+ of rows in range-chunk 0, while quantile
-    boundaries keep the largest chunk near n/n_chunks."""
-    from pyspark.sql import Window
-
-    rows = [(i, float(2 ** (i % 24))) for i in range(3000)]
-    df = spark.createDataFrame(rows, "id long, v double").repartition(8)
-    for desc in (False, True):
-        order = F.col("v").desc() if desc else F.col("v").asc()
-        expect = df.select(
-            "id", F.ntile(7).over(Window.orderBy(order, "id")).alias("t")
-        )
-        got = sampling.exact_global_ntile(
-            df, 7, "v", "id", desc=desc, n_chunks=8,
-            out_col="t", chunk_bounds="quantile",
-        ).select("id", "t")
-        mism = got.join(expect, "id").filter(
-            got["t"] != expect["t"]
-        ).count()
-        assert mism == 0, desc
-    # balance: rebuild the chunk assignment and inspect sizes
-    sized = sampling.exact_global_ntile(
-        df, 7, "v", "id", n_chunks=8, chunk_bounds="quantile"
-    )
-    assert sized.count() == 3000
-    # the range-mode straggler this exists to avoid: with v ~ 2^i the
-    # bottom range chunk holds ~88% of rows
-    o = F.col("v")
-    bounds = df.agg(F.min(o).alias("mn"), F.max(o).alias("mx"))
-    range_chunk = df.crossJoin(F.broadcast(bounds)).select(
-        F.least(
-            F.lit(7),
-            F.floor((o - F.col("mn")) / (F.col("mx") - F.col("mn")) * 8),
-        ).alias("c")
-    )
-    top_range = (
-        range_chunk.groupBy("c").count().agg(F.max("count")).first()[0]
-    )
-    assert top_range > 2400  # range mode: one chunk hoards the corpus
-    cuts = df.select(F.col("v").alias("o")).approxQuantile(
-        "o", [i / 8 for i in range(1, 8)], 0.001
-    )
-    barr = F.array(*[F.lit(float(b)) for b in cuts])
-    q_chunk = df.select(
-        F.aggregate(
-            barr, F.lit(0),
-            lambda acc, b: acc + F.when(F.col("v") >= b, 1).otherwise(0),
-        ).alias("c")
-    )
-    top_quant = q_chunk.groupBy("c").count().agg(F.max("count")).first()[0]
-    assert top_quant <= 800, top_quant  # ~n/n_chunks + tie granularity
 
 
 def test_token_budget_waterfilling_invariants(spark, sf_dir, monkeypatch):
