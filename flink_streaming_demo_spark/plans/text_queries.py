@@ -908,15 +908,9 @@ def dedup_crossdoc_stream_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = _planted_corpus(spark, sf_dir)
     root = _store_root("crossdoc_gate", sf_dir)
-    docs = ParquetUpsertSink(
-        os.path.join(root, "docs"), ["doc_id"], n_buckets=8
-    )
-    fps = ParquetUpsertSink(
-        os.path.join(root, "fps"), ["doc_id", "fp"], n_buckets=8
-    )
-    decisions = ParquetUpsertSink(
-        os.path.join(root, "decisions"), ["doc_id"], n_buckets=8
-    )
+    docs = ParquetUpsertSink(os.path.join(root, "docs"), ["doc_id"])
+    fps = ParquetUpsertSink(os.path.join(root, "fps"), ["doc_id", "fp"])
+    decisions = ParquetUpsertSink(os.path.join(root, "decisions"), ["doc_id"])
     body = streaming_crossdoc_dedup_gate(docs, fps, decisions)
     for i in range(CROSSDOC_GATE_SLICES):
         body(

@@ -10,7 +10,8 @@ The driver's schema is a *reduced* TPC-H (no partsupp, no
 comment/phone/shipmode/commitdate columns), so each query is the standard
 TPC-H shape adapted to available columns; adaptations are noted per query.
 
-Float determinism (same policy as tpch_queries): every double aggregate is
+Float determinism (same policy as tpch_queries): every money sum goes
+through ``functions.money.money_sum``, every other double aggregate is
 ROUND()ed on both sides, and ratios divide *already-rounded* sums so the
 quotient is identical regardless of addition order.
 """
@@ -64,21 +65,21 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.groupBy(
         "supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year")
     ).agg(
-        F.round(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-        ).alias("revenue")
+        money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+            "revenue"
+        )
     )
 
 
 register(
     "tpch_q7_volume_shipping",
     tpch_q7_volume_shipping,
-    """
+    f"""
     SELECT
         supp_nation,
         cust_nation,
         l_year,
-        ROUND(SUM(volume), 2) AS revenue
+        {sql_money_sum("volume")} AS revenue
     FROM (
         SELECT
             n1.n_name AS supp_nation,
@@ -135,11 +136,10 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     agg = joined.groupBy(F.year("o_orderdate").alias("o_year")).agg(
-        F.round(
-            F.sum(F.when(F.col("supp_nation") == "NATION_1", vol).otherwise(0.0)),
-            2,
+        money_sum(
+            F.when(F.col("supp_nation") == "NATION_1", vol).otherwise(0.0)
         ).alias("nation_vol"),
-        F.round(F.sum(vol), 2).alias("total_vol"),
+        money_sum(vol).alias("total_vol"),
     )
     return agg.select(
         "o_year",
@@ -150,17 +150,18 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 register(
     "tpch_q8_market_share",
     tpch_q8_market_share,
-    """
+    f"""
     SELECT
         o_year,
         ROUND(nation_vol / total_vol, 6) AS mkt_share
     FROM (
         SELECT
             CAST(YEAR(o_orderdate) AS INT) AS o_year,
-            ROUND(SUM(CASE WHEN n2.n_name = 'NATION_1'
-                           THEN l_extendedprice * (1 - l_discount)
-                           ELSE 0.0 END), 2) AS nation_vol,
-            ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS total_vol
+            {sql_money_sum(
+                "CASE WHEN n2.n_name = 'NATION_1' "
+                "THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END"
+            )} AS nation_vol,
+            {sql_money_sum("l_extendedprice * (1 - l_discount)")} AS total_vol
         FROM lineitem
         JOIN part ON l_partkey = p_partkey
         JOIN orders ON l_orderkey = o_orderkey
@@ -294,10 +295,10 @@ def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     agg = li.join(F.broadcast(prt), li.l_partkey == prt.p_partkey).agg(
-        F.round(
-            F.sum(F.when(F.col("p_type") == "PROMO", vol).otherwise(0.0)), 2
+        money_sum(
+            F.when(F.col("p_type") == "PROMO", vol).otherwise(0.0)
         ).alias("promo_vol"),
-        F.round(F.sum(vol), 2).alias("total_vol"),
+        money_sum(vol).alias("total_vol"),
     )
     return agg.select(
         F.round(
@@ -309,14 +310,15 @@ def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 register(
     "tpch_q14_promo_revenue",
     tpch_q14_promo_revenue,
-    """
+    f"""
     SELECT ROUND(100.0 * promo_vol / total_vol, 6) AS promo_pct
     FROM (
         SELECT
-            ROUND(SUM(CASE WHEN p_type = 'PROMO'
-                           THEN l_extendedprice * (1 - l_discount)
-                           ELSE 0.0 END), 2) AS promo_vol,
-            ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS total_vol
+            {sql_money_sum(
+                "CASE WHEN p_type = 'PROMO' "
+                "THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END"
+            )} AS promo_vol,
+            {sql_money_sum("l_extendedprice * (1 - l_discount)")} AS total_vol
         FROM lineitem
         JOIN part ON l_partkey = p_partkey
         WHERE l_shipdate >= TIMESTAMP '1997-09-01'
@@ -341,9 +343,9 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.expr("timestamp'1997-04-01'"))
     )
     rev = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        F.round(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-        ).alias("total_revenue")
+        money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+            "total_revenue"
+        )
     )
     max_rev = rev.agg(F.max("total_revenue").alias("max_revenue"))
     supp = t(spark, sf_dir, "supplier")
@@ -360,11 +362,12 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 register(
     "tpch_q15_top_supplier",
     tpch_q15_top_supplier,
-    """
+    f"""
     WITH rev AS (
         SELECT
             l_suppkey AS supplier_no,
-            ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS total_revenue
+            {sql_money_sum("l_extendedprice * (1 - l_discount)")}
+                AS total_revenue
         FROM lineitem
         WHERE l_shipdate >= TIMESTAMP '1997-01-01'
           AND l_shipdate < TIMESTAMP '1997-04-01'
@@ -399,7 +402,7 @@ def tpch_q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(avg_qty), li.l_partkey == F.col("ap_key"))
         .filter(F.col("l_quantity") < F.col("qty_threshold"))
         .agg(
-            F.round(F.round(F.sum("l_extendedprice"), 2) / 7.0, 2).alias(
+            F.round(money_sum(F.col("l_extendedprice")) / 7.0, 2).alias(
                 "avg_yearly"
             )
         )
@@ -409,8 +412,8 @@ def tpch_q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
 register(
     "tpch_q17_small_quantity",
     tpch_q17_small_quantity,
-    """
-    SELECT ROUND(ROUND(SUM(l_extendedprice), 2) / 7.0, 2) AS avg_yearly
+    f"""
+    SELECT ROUND({sql_money_sum("l_extendedprice")} / 7.0, 2) AS avg_yearly
     FROM lineitem
     JOIN part ON p_partkey = l_partkey
     WHERE p_brand = 'Brand#13'
@@ -451,9 +454,9 @@ def tpch_q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("l_quantity").between(20, 30)
     )
     return j.filter(branch1 | branch2 | branch3).agg(
-        F.round(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-        ).alias("revenue"),
+        money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+            "revenue"
+        ),
         F.count(F.lit(1)).alias("n_items"),
     )
 
@@ -461,9 +464,9 @@ def tpch_q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 register(
     "tpch_q19_discounted_revenue",
     tpch_q19_discounted_revenue,
-    """
+    f"""
     SELECT
-        ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+        {sql_money_sum("l_extendedprice * (1 - l_discount)")} AS revenue,
         COUNT(*) AS n_items
     FROM lineitem
     JOIN part ON l_partkey = p_partkey
@@ -511,7 +514,7 @@ def tpch_q22_global_sales_opportunity(
         .groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            F.round(F.sum("c_acctbal"), 2).alias("totacctbal"),
+            money_sum(F.col("c_acctbal")).alias("totacctbal"),
         )
     )
 
@@ -519,11 +522,11 @@ def tpch_q22_global_sales_opportunity(
 register(
     "tpch_q22_global_sales_opportunity",
     tpch_q22_global_sales_opportunity,
-    """
+    f"""
     SELECT
         c_mktsegment,
         COUNT(*) AS numcust,
-        ROUND(SUM(c_acctbal), 2) AS totacctbal
+        {sql_money_sum("c_acctbal")} AS totacctbal
     FROM customer
     WHERE c_acctbal > (
             SELECT ROUND(AVG(c_acctbal), 2)
@@ -753,17 +756,17 @@ def tpch_running_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     TPC-H, growing with time, never with volume), so the one-task
     ordered pass is bounded and allowlisted in the plan guard.
 
-    Determinism discipline: each day's double revenue sum rounds to
-    exact integer CENTS (bigint) first, so the cumulative fold is pure
-    integer arithmetic — immune to the engines' different windowed-sum
-    association (DuckDB segment-tree vs Spark sequential), which over
+    Determinism discipline: each day's revenue is a money sum
+    (``functions.money.money_sum``) taken as integer CENTS (bigint)
+    first, so the cumulative fold is pure integer arithmetic — immune
+    to the engines' different windowed-sum association (DuckDB segment-tree vs Spark sequential), which over
     2.5k float addends is exactly where a last-ulp wobble would cross a
     rounding boundary. The /100.0 back to dollars is one exact-input
     division, identical on both engines."""
     li = t(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.date_trunc("DAY", F.col("l_shipdate")).alias("ship_date")).agg(
         F.round(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+            money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
             * 100,
             0,
         )
@@ -789,11 +792,11 @@ def tpch_running_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 register(
     "tpch_running_revenue",
     tpch_running_revenue,
-    """
+    f"""
     WITH daily AS (
         SELECT date_trunc('day', CAST(l_shipdate AS TIMESTAMP)) AS ship_date,
-               CAST(ROUND(SUM(l_extendedprice * (1 - l_discount)) * 100,
-                          0) AS BIGINT) AS cents
+               CAST(ROUND({sql_money_sum("l_extendedprice * (1 - l_discount)")}
+                          * 100, 0) AS BIGINT) AS cents
         FROM lineitem
         GROUP BY 1
     )

@@ -8,7 +8,7 @@ shuffle join, partial aggregation, top-k without global sort).
 
 Float determinism: SUM/AVG over doubles is addition-order-dependent, so
 every double aggregate is wrapped in ROUND(..., 2|6) on BOTH sides, and
-the headline money sums go through ``functions.money.money_sum``; raw
+every money sum goes through ``functions.money.money_sum``; raw
 (non-aggregated) doubles are passed through untouched (bit-identical).
 """
 
@@ -196,9 +196,9 @@ def tpch_q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2
-            ).alias("revenue"),
+            money_sum(F.col("l_extendedprice") * F.col("l_discount")).alias(
+                "revenue"
+            ),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
@@ -207,9 +207,9 @@ def tpch_q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 register(
     "tpch_q6_revenue_forecast",
     tpch_q6_revenue_forecast,
-    """
+    f"""
     SELECT
-        ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue,
+        {sql_money_sum("l_extendedprice * l_discount")} AS revenue,
         COUNT(*) AS n_items
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1996-01-01'

@@ -664,9 +664,7 @@ def sim_ivf_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
     root = _store_root("ivf_store", sf_dir)
-    cells = ParquetUpsertSink(
-        os.path.join(root, "cells"), ["vec_id"], n_buckets=8
-    )
+    cells = ParquetUpsertSink(os.path.join(root, "cells"), ["vec_id"])
     body = streaming_ivf_index(cells, centroids)
     for i in range(3):
         body(emb.filter(F.col("vec_id") % 3 == i), epoch_id=i)
@@ -754,12 +752,8 @@ def dedup_ivf_stream_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
     root = _store_root("ivf_gate", sf_dir)
-    cells = ParquetUpsertSink(
-        os.path.join(root, "cells"), ["vec_id"], n_buckets=8
-    )
-    decisions = ParquetUpsertSink(
-        os.path.join(root, "decisions"), ["vec_id"], n_buckets=8
-    )
+    cells = ParquetUpsertSink(os.path.join(root, "cells"), ["vec_id"])
+    decisions = ParquetUpsertSink(os.path.join(root, "decisions"), ["vec_id"])
     body = streaming_ivf_dedup_gate(
         cells, decisions, centroids, threshold=NEARDUP_THRESHOLD
     )

@@ -18,8 +18,9 @@ Three implementations:
   MERGE-capable backend" note below, honest about its driver-resident
   scale class (decision/checkpoint/config tables).
 * ``ParquetUpsertSink`` — keyed merge into a hash-bucket-partitioned
-  parquet table. Each micro-batch rewrites ONLY the bucket partitions that
-  contain batch keys (dynamic partition overwrite), so merge cost is
+  parquet table, 8 buckets by default. Each micro-batch rewrites ONLY the
+  bucket partitions that contain batch keys (dynamic partition
+  overwrite), as one file per touched bucket, so merge cost is
   O(touched buckets), not O(table) — the jar-free shape of a Delta/Iceberg
   ``MERGE INTO``; at production scale the same ``foreachBatch`` body
   targets a real MERGE-capable store (or an OpenSearch bulk-upsert
@@ -124,9 +125,19 @@ class ParquetUpsertSink:
     4. dynamic-partition-overwrite: only the touched ``__kb=`` directories
        are replaced; every other partition's files are left byte-identical.
 
+    Each merge clusters the merged rows by bucket, so every touched bucket
+    holds exactly one file afterwards. The first write adds no shuffle:
+    its dedup exchange hash-partitions on ``key_cols`` with the same
+    Murmur3 hash as the bucket, so when ``spark.sql.shuffle.partitions``
+    divides ``n_buckets`` each bucket lands in one file; otherwise a
+    bucket may start with several files until its first merge.
+
     ``n_buckets`` bounds per-partition size at scale (pick ~table_size /
-    target_partition_size); the default 64 suits tests. A store created
-    with one ``n_buckets`` must be reused with the same value.
+    target_partition_size); 8 by default, the count every package store
+    uses. Every file costs a fixed write, so a larger count makes each
+    merge that touches all buckets slower. A store created with one
+    ``n_buckets`` must be reused with the same value; the layout check
+    raises when the store records another.
     """
 
     def __init__(
@@ -134,7 +145,7 @@ class ParquetUpsertSink:
         path: str,
         key_cols: list[str],
         order_col: str | None = None,
-        n_buckets: int = 64,
+        n_buckets: int = 8,
     ):
         self.path = path
         self.key_cols = list(key_cols)
@@ -268,7 +279,12 @@ class ParquetUpsertSink:
         # re-readable). A cluster deployment should reinstate an
         # on-disk staging write here; in this engine's local[{n}]
         # harness the executor IS the driver, so the window is moot.
-        merged = keep.unionByName(fresh).localCheckpoint()
+        # Clustering by bucket gives one file per touched bucket, whatever
+        # partitions the store scan and the batch arrived in; without it
+        # each merge adds files to a bucket instead of replacing them.
+        merged = (
+            keep.unionByName(fresh).repartition(BUCKET_COL).localCheckpoint()
+        )
         (
             merged.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

@@ -385,6 +385,63 @@ def test_parquet_upsert_sink_prunes_untouched_buckets(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+def test_parquet_upsert_sink_keeps_one_file_per_bucket(spark):
+    """Every merge leaves each touched bucket as exactly one part file,
+    whatever partitions the old-store scan and the batch arrive in; a
+    merge that only added files would make each later merge read and
+    write more of them."""
+    import os
+
+    from flink_streaming_demo_spark.streaming.sinks import (
+        BUCKET_COL,
+        ParquetUpsertSink,
+    )
+
+    d = tempfile.mkdtemp(prefix="upsert_")
+    path = d + "/kv"
+    schema = "k int, v string"
+    try:
+        sink = ParquetUpsertSink(path, ["k"])
+        want = {i: f"v{i}" for i in range(120)}
+
+        def check():
+            buckets = [
+                b for b in os.listdir(path) if b.startswith(BUCKET_COL + "=")
+            ]
+            assert len(buckets) == sink.n_buckets
+            for b in buckets:
+                parts = [
+                    f for f in os.listdir(os.path.join(path, b))
+                    if f.startswith("part-") and f.endswith(".parquet")
+                ]
+                assert len(parts) == 1, f"{b} holds {parts}"
+            got = {r.k: r.v for r in sink.read(spark).collect()}
+            assert got == want
+
+        sink.foreach_batch(
+            spark.createDataFrame(list(want.items()), schema).repartition(3),
+            0,
+        )
+        check()
+        for epoch in (1, 2, 3):
+            # a third of the old keys change and new keys arrive: every
+            # bucket keeps old rows and takes fresh ones
+            fresh = {
+                k: f"v{k}-e{epoch}"
+                for k in list(range(epoch, 120, 3))
+                + list(range(100 * epoch + 100, 100 * epoch + 130))
+            }
+            want.update(fresh)
+            sink.foreach_batch(
+                spark.createDataFrame(list(fresh.items()), schema)
+                .repartition(3),
+                epoch,
+            )
+            check()
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
 def test_parquet_upsert_sink_empty_first_batch_is_noop(spark):
     """An empty FIRST micro-batch must not crash (a partitioned write of an
     empty frame emits no part files -> the staging re-read would fail) and
@@ -424,6 +481,16 @@ def test_parquet_upsert_sink_rejects_incompatible_layout(spark):
         with pytest.raises(ValueError, match="n_buckets=8"):
             ParquetUpsertSink(p1, ["k"], n_buckets=16).foreach_batch(
                 spark.createDataFrame([(2, "b")], schema), 0
+            )
+        # a 64-bucket store reopened with the default bucket count is
+        # refused, not merged into with duplicated keys
+        p64 = d + "/kv64"
+        ParquetUpsertSink(p64, ["k"], n_buckets=64).foreach_batch(
+            spark.createDataFrame([(1, "a")], schema), 0
+        )
+        with pytest.raises(ValueError, match="n_buckets=64"):
+            ParquetUpsertSink(p64, ["k"]).foreach_batch(
+                spark.createDataFrame([(2, "b")], schema), 1
             )
         # pre-existing unbucketed table
         p2 = d + "/plain"
