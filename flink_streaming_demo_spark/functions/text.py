@@ -68,7 +68,7 @@ def tokens(text: Column) -> Column:
 def py_token_grams(text: str, n: int):
     """Python twin of ``tokens`` + space-joined n-grams: the ONE place
     the vectorized Arrow extractors (winnow_fp_rows, dedup.shingle_rows,
-    text_queries._ngram_rows) get their tokenization and gram-join
+    dedup._token_gram_rows) get their tokenization and gram-join
     convention, so it cannot drift per-site. ``str.split(' ')`` matches
     Spark's ``split(text, ' ')`` exactly (single-space regex, empty
     tokens for runs of spaces, trailing empties kept). Returns a list

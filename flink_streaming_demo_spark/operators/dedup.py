@@ -1343,9 +1343,12 @@ def _token_gram_rows(
 ) -> DataFrame:
     """(id, s, gram): positional (1-based) space-joined token n-grams
     per document, emitted by one Arrow-batched map pass over the scan
-    (the plans._ngram_rows shape; shares functions/text.py_token_grams
-    so tokenization cannot drift). Docs shorter than n tokens and null
-    texts emit nothing."""
+    (shares functions/text.py_token_grams so tokenization cannot
+    drift). Value-identical to posexploding ``_guarded_ngrams`` in
+    plans/text_queries (tested); Catalyst runs that transform/slice
+    lambda chain interpreted, and this join-of-slices pass is ~10x
+    faster with the same map-only shape. Docs shorter than n tokens and
+    null texts emit nothing."""
     import pandas as pd
 
     from flink_streaming_demo_spark.functions.text import py_token_grams
@@ -1585,8 +1588,8 @@ def cross_doc_strip(
     plus one per-doc collect of that doc's intervals (interval count is
     bounded by the doc's matched runs, never corpus-sized) and a
     map-only Arrow pass doing the numpy coverage sweep per doc —
-    O(tokens + intervals), the strip_dup_spans finish kernel
-    generalized to variable-length intervals."""
+    O(tokens + intervals), the ``_strip_covered`` kernel that
+    strip_dup_spans shares."""
     intervals = cross_doc_intervals(
         df, text_col, id_col, min_span, max_fp_df, max_gram_df
     )
@@ -1597,6 +1600,33 @@ def cross_doc_strip(
         id_col, text_col, "ivals"
     )
 
+    return _strip_covered(
+        joined,
+        id_col,
+        text_col,
+        "ivals",
+        lambda ivals: (
+            [iv["st"] for iv in ivals], [iv["en"] for iv in ivals]
+        ),
+    )
+
+
+def _strip_covered(
+    joined: DataFrame, id_col: str, text_col: str, iv_col: str, bounds
+) -> DataFrame:
+    """Per-doc strip kernel shared by ``cross_doc_strip`` and
+    ``plans/text_queries.strip_dup_spans``: one map-only Arrow pass over
+    (id_col, text_col, iv_col) rows, where ``bounds(v)`` turns a doc's
+    non-empty ``iv_col`` value into (starts, ends) of its covered
+    1-based inclusive token intervals. A numpy coverage sweep merges the
+    intervals (O(tokens + intervals)) and the uncovered tokens, joined
+    by single spaces, are hashed.
+
+    Returns (id_col, n_tokens, dup_token_count, n_spans, kept_hash);
+    a null text yields (NULL, 0, 0, md5('')) — oracle-pinned: n_tokens
+    is the length of a null token array, the duplicate counts COALESCE
+    over missing aggregate rows, and the residue is empty."""
+
     def finish(batches):
         import hashlib
 
@@ -1605,8 +1635,8 @@ def cross_doc_strip(
 
         for pdf in batches:
             recs = []
-            for doc_id, text, ivals in zip(
-                pdf[id_col], pdf[text_col], pdf["ivals"]
+            for doc_id, text, iv in zip(
+                pdf[id_col], pdf[text_col], pdf[iv_col]
             ):
                 if text is None:
                     recs.append(
@@ -1616,11 +1646,10 @@ def cross_doc_strip(
                 toks = text.split(" ")
                 nt = len(toks)
                 cov = np.zeros(nt + 2, dtype=np.int32)
-                if ivals is not None and len(ivals):
-                    st = np.asarray([iv["st"] for iv in ivals],
-                                    dtype=np.int64)
-                    en = np.asarray([iv["en"] for iv in ivals],
-                                    dtype=np.int64)
+                if iv is not None and len(iv):
+                    st, en = (
+                        np.asarray(a, dtype=np.int64) for a in bounds(iv)
+                    )
                     np.add.at(cov, np.minimum(st, nt + 1), 1)
                     np.add.at(cov, np.minimum(en + 1, nt + 1), -1)
                 covered = np.cumsum(cov[: nt + 1])[1:] > 0
@@ -1650,7 +1679,7 @@ def cross_doc_strip(
                 ],
             )
 
-    id_type = dict(df.dtypes)[id_col]
+    id_type = dict(joined.dtypes)[id_col]
     return joined.mapInPandas(
         finish,
         schema=(

@@ -214,6 +214,19 @@ def bm25_topk(
     ``bm25_rank`` (shared with the streaming index's read-time view).
     """
     terms = _check_terms(query_terms)
+    tf, stats = _bm25_frames(docs, terms, id_col, text_col)
+    return bm25_rank(
+        tf, stats, terms, k=k, k1=k1, b=b, exclude_id=exclude_id
+    )
+
+
+def _bm25_frames(
+    docs: DataFrame, terms: Sequence[str], id_col: str, text_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The query front of ``bm25_topk`` and ``bm25_batch_topk``:
+    (tf, stats) over one corpus scan. ``tf``: (doc_id, dl, term, tf),
+    one row per (doc, query term); ``stats``: one row (n_docs, sum_dl)
+    over the full corpus."""
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
         F.split(F.col(text_col), " ").alias("toks"),
@@ -235,9 +248,7 @@ def bm25_topk(
         .groupBy("doc_id", "dl", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    return bm25_rank(
-        tf, stats, terms, k=k, k1=k1, b=b, exclude_id=exclude_id
-    )
+    return tf, stats
 
 
 def check_query_bags(
@@ -363,25 +374,7 @@ def bm25_batch_topk(
     never by the union vocabulary.
     """
     _, union_terms = check_query_bags(query_bags)
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.split(F.col(text_col), " ").alias("toks"),
-    )
-    lengths = toks.select("doc_id", F.size("toks").alias("dl"))
-    stats = lengths.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
-    )
-    tf = (
-        toks.select(
-            "doc_id",
-            F.size("toks").alias("dl"),
-            F.explode(
-                F.filter(F.col("toks"), lambda x: x.isin(*union_terms))
-            ).alias("term"),
-        )
-        .groupBy("doc_id", "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
+    tf, stats = _bm25_frames(docs, union_terms, id_col, text_col)
     return bm25_batch_rank(tf, stats, query_bags, k=k, k1=k1, b=b)
 
 

@@ -78,6 +78,68 @@ def cosine_score_col(
     )
 
 
+# --- One scoring tail for the dense-retrieval rankers ------------------------
+#
+# Every (query, neighbor) ranker below is the same three steps: project
+# each side to (id, vec, norm), score joined pairs with the rounded
+# cosine, keep each query's top k. Each step has ONE body here, so the
+# rounding and the neighbor_id tie rule cannot drift between rankers.
+
+_SIDE_ID = {"q": "query_id", "c": "neighbor_id"}
+
+
+def _side(
+    df: DataFrame,
+    side: str,
+    *extra,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    norm: str | None = None,
+) -> DataFrame:
+    """One side of a scoring join: (query_id, q_vec, q_norm, *extra) for
+    ``side="q"``, (neighbor_id, c_vec, c_norm, *extra) for ``"c"``. The
+    norm is computed once per row here, not once per pair (|Q|+|C|
+    norms instead of |Q|x|C|), unless ``norm`` names a column that
+    already holds it (the IVF assignment's and cell store's ``nrm``)."""
+    return df.select(
+        F.col(id_col).alias(_SIDE_ID[side]),
+        F.col(vec_col).alias(f"{side}_vec"),
+        (l2_norm_col(vec_col) if norm is None else F.col(norm)).alias(
+            f"{side}_norm"
+        ),
+        *extra,
+    )
+
+
+def _score(pairs: DataFrame, *keep: str) -> DataFrame:
+    """(query_id, neighbor_id, *keep, score): the rounded cosine of
+    every joined (q side, c side) pair."""
+    return pairs.select(
+        "query_id",
+        "neighbor_id",
+        *keep,
+        cosine_score_col("q_vec", "c_vec", "q_norm", "c_norm").alias("score"),
+    )
+
+
+def _topk(scored: DataFrame, k: int, by: Column, *tail: str) -> DataFrame:
+    """Per-query top-k: row_number over ``by`` with ties broken on
+    ascending neighbor_id, so ranks are 1..k with no gaps on every
+    engine. Returns (query_id, rank, neighbor_id, *tail)."""
+    w = Window.partitionBy("query_id").orderBy(by, F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", *tail)
+    )
+
+
+def _cosine_topk(pairs: DataFrame, k: int, *keep: str) -> DataFrame:
+    """_score then _topk by descending score: (query_id, rank,
+    neighbor_id, *keep, score)."""
+    return _topk(_score(pairs, *keep), k, F.desc("score"), *keep, "score")
+
+
 def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -92,38 +154,14 @@ def brute_force_topk(
     per-query top-k, which is bounded by |Q| x k rows after the window
     filter's partial ranking.
     """
-    # Norms are computed ONCE per row in the projections (|Q|+|C| norms),
-    # not per pair (|Q|x|C|) — same values, 1/3 the array work per pair.
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        l2_norm_col(vec_col).alias("q_norm"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm_col(vec_col).alias("c_norm"),
-    )
-    scored = (
+    q = _side(queries, "q", id_col=id_col, vec_col=vec_col)
+    c = _side(corpus, "c", id_col=id_col, vec_col=vec_col)
+    pairs = (
         F.broadcast(q)
         .crossJoin(c)
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_score_col(
-                "q_vec", "c_vec", "q_norm", "c_norm"
-            ).alias("score"),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
+    return _cosine_topk(pairs, k)
 
 
 def hard_negatives(
@@ -142,39 +180,20 @@ def hard_negatives(
     label-mismatch predicate applied BEFORE ranking so every returned
     rank is a usable negative: (query_id, rank, neighbor_id,
     neighbor_label, score)."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(label_col).alias("q_label"),
-        F.col(vec_col).alias("q_vec"),
-        l2_norm_col(vec_col).alias("q_norm"),
+    q = _side(
+        queries, "q", F.col(label_col).alias("q_label"),
+        id_col=id_col, vec_col=vec_col,
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("neighbor_label"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm_col(vec_col).alias("c_norm"),
+    c = _side(
+        corpus, "c", F.col(label_col).alias("neighbor_label"),
+        id_col=id_col, vec_col=vec_col,
     )
-    scored = (
+    pairs = (
         F.broadcast(q)
         .crossJoin(c)
         .filter(F.col("q_label") != F.col("neighbor_label"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "neighbor_label",
-            cosine_score_col(
-                "q_vec", "c_vec", "q_norm", "c_norm"
-            ).alias("score"),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "neighbor_label", "score")
-    )
+    return _cosine_topk(pairs, k, "neighbor_label")
 
 
 MAX_LSH_DIMS = 64
@@ -243,38 +262,15 @@ def lsh_bucketed_topk(
     """Approximate top-k: candidates limited to the query's LSH bucket, then
     exact cosine rerank. Scale path: bucket join replaces the cross join;
     recall traded via n_bits (fewer bits -> bigger buckets -> higher recall)."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        l2_norm_col(vec_col).alias("q_norm"),
-        lsh_hyperplane_signature(vec_col, n_bits).alias("bucket"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm_col(vec_col).alias("c_norm"),
-        lsh_hyperplane_signature(vec_col, n_bits).alias("bucket"),
-    )
-    scored = (
+    bucket = lsh_hyperplane_signature(vec_col, n_bits).alias("bucket")
+    q = _side(queries, "q", bucket, id_col=id_col, vec_col=vec_col)
+    c = _side(corpus, "c", bucket, id_col=id_col, vec_col=vec_col)
+    pairs = (
         F.broadcast(q)
         .join(c, "bucket")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_score_col(
-                "q_vec", "c_vec", "q_norm", "c_norm"
-            ).alias("score"),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
+    return _cosine_topk(pairs, k)
 
 
 def embedding_neardup_pairs(
@@ -450,11 +446,9 @@ def assign_to_centroids(
             vec_col,
             "nrm",
             "centroid_id",
-            F.round(
-                dot(F.col(vec_col), F.col("c_vec"))
-                / (F.col("nrm") * F.col("c_nrm")),
-                6,
-            ).alias("c_score"),
+            cosine_score_col(vec_col, "c_vec", "nrm", "c_nrm").alias(
+                "c_score"
+            ),
         )
     )
     w = Window.partitionBy(id_col).orderBy(
@@ -613,19 +607,35 @@ def ivf_topk(
     deterministic seed vectors so the DuckDB oracle reproduces the
     partition bit-for-bit).
     """
-    corp = assign_to_centroids(corpus, centroids, 1, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.col("nrm").alias("c_norm"),
-        "centroid_id",
-    )
-    qry = assign_to_centroids(queries, centroids, nprobe, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.col("nrm").alias("q_norm"),
-        "centroid_id",
-    )
+    corp = _ivf_side(corpus, centroids, 1, "c", id_col, vec_col)
+    qry = _ivf_side(queries, centroids, nprobe, "q", id_col, vec_col)
     return ivf_rank(qry, corp, k)
+
+
+def _ivf_side(
+    df: DataFrame,
+    centroids: DataFrame,
+    n_assign: int,
+    side: str,
+    id_col: str,
+    vec_col: str,
+    *extra,
+    keep_rank: bool = False,
+) -> DataFrame:
+    """``df`` assigned to its ``n_assign`` nearest cells, projected as
+    one IVF scoring side: (query_id|neighbor_id, vec, norm, centroid_id,
+    *extra), the norm reused from the assignment."""
+    return _side(
+        assign_to_centroids(
+            df, centroids, n_assign, id_col, vec_col, keep_rank=keep_rank
+        ),
+        side,
+        "centroid_id",
+        *extra,
+        id_col=id_col,
+        vec_col=vec_col,
+        norm="nrm",
+    )
 
 
 def ivf_rank(qry: DataFrame, corp: DataFrame, k: int) -> DataFrame:
@@ -638,25 +648,16 @@ def ivf_rank(qry: DataFrame, corp: DataFrame, k: int) -> DataFrame:
     view ``streaming/pipelines.ivf_topk_view`` rank through THIS
     function, so view floats equal batch floats bit-for-bit over
     identical frames (the streaming≡batch test pins it row-for-row)."""
-    scored = (
+    return _cosine_topk(_ivf_pairs(qry, corp), k)
+
+
+def _ivf_pairs(qry: DataFrame, corp: DataFrame) -> DataFrame:
+    """Cell equi-join of a broadcast IVF query side and a corpus side,
+    self-pairs excluded."""
+    return (
         F.broadcast(qry)
         .join(corp, "centroid_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_score_col(
-                "q_vec", "c_vec", "q_norm", "c_norm"
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
     )
 
 
@@ -730,11 +731,9 @@ def cell_neardup_gate(
         .select(
             "_in_id",
             "member_id",
-            F.round(
-                dot(F.col("q_vec"), F.col("m_vec"))
-                / (F.col("q_norm") * F.col("m_norm")),
-                6,
-            ).alias("cos_sim"),
+            cosine_score_col("q_vec", "m_vec", "q_norm", "m_norm").alias(
+                "cos_sim"
+            ),
         )
         .filter(F.col("cos_sim") >= threshold)
     )
@@ -789,34 +788,12 @@ def ivf_probe_pairs(
     broadcast. Candidates ~ max_probe/K of the corpus per query —
     never all-pairs.
     """
-    corp = assign_to_centroids(corpus, centroids, 1, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.col("nrm").alias("c_norm"),
-        "centroid_id",
+    corp = _ivf_side(corpus, centroids, 1, "c", id_col, vec_col)
+    qry = _ivf_side(
+        queries, centroids, max_probe, "q", id_col, vec_col,
+        F.col("c_rank").alias("probe_rank"), keep_rank=True,
     )
-    qry = assign_to_centroids(
-        queries, centroids, max_probe, id_col, vec_col, keep_rank=True
-    ).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.col("nrm").alias("q_norm"),
-        "centroid_id",
-        F.col("c_rank").alias("probe_rank"),
-    )
-    return (
-        F.broadcast(qry)
-        .join(corp, "centroid_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "probe_rank",
-            cosine_score_col(
-                "q_vec", "c_vec", "q_norm", "c_norm"
-            ).alias("score"),
-        )
-    )
+    return _score(_ivf_pairs(qry, corp), "probe_rank")
 
 
 def semantic_dedup(
@@ -894,11 +871,9 @@ def semantic_dedup(
             "centroid_id",
             "id_a",
             "id_b",
-            F.round(
-                dot(F.col("vec_a"), F.col("vec_b"))
-                / (F.col("norm_a") * F.col("norm_b")),
-                6,
-            ).alias("cos_sim"),
+            cosine_score_col("vec_a", "vec_b", "norm_a", "norm_b").alias(
+                "cos_sim"
+            ),
         )
         .filter(F.col("cos_sim") >= threshold)
     )
@@ -1104,30 +1079,37 @@ def pq_adc_topk(
     bound |C| per query (IVF-PQ) at 100 TB.
     """
     enc = pq_encode(corpus, codebooks, id_col, vec_col, m, dsub)
-    qsub = subvectors(queries, id_col, vec_col, m, dsub).select(
-        F.col(id_col).alias("query_id"), "su", F.col("svec").alias("qvec")
-    )
-    dtable = qsub.join(F.broadcast(codebooks), "su").select(
-        "query_id",
-        "su",
-        "code",
-        F.floor(sq_l2(F.col("qvec"), F.col("cvec")) * F.lit(1000000.0))
-        .cast("bigint")
-        .alias("pd_micro"),
-    )
+    dtable = _adc_table(queries, codebooks, id_col, vec_col, m, dsub)
     adc = (
         enc.join(F.broadcast(dtable), ["su", "code"])
         .filter(F.col("query_id") != F.col(id_col))
         .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
         .agg(F.sum("pd_micro").alias("adc_micro"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_micro"), F.asc("neighbor_id")
+    return _topk(adc, k, F.asc("adc_micro"), "adc_micro")
+
+
+def _adc_table(
+    queries: DataFrame,
+    codebooks: DataFrame,
+    id_col: str,
+    vec_col: str,
+    m: int,
+    dsub: int,
+) -> DataFrame:
+    """Per-query ADC distance table (query_id, su, code, pd_micro): each
+    query subvector's squared L2 to every code of its subspace, floored
+    to integer micro-units so the M-way sum is exact in any order."""
+    qsub = subvectors(queries, id_col, vec_col, m, dsub).select(
+        F.col(id_col).alias("query_id"), "su", F.col("svec").alias("qvec")
     )
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "adc_micro")
+    return qsub.join(F.broadcast(codebooks), "su").select(
+        "query_id",
+        "su",
+        "code",
+        F.floor(sq_l2(F.col("qvec"), F.col("cvec")) * F.lit(1000000.0))
+        .cast("bigint")
+        .alias("pd_micro"),
     )
 
 
@@ -1227,35 +1209,10 @@ def pq_shortlist_rerank(
         queries, corpus, codebooks, k=shortlist,
         id_col=id_col, vec_col=vec_col, m=m, dsub=dsub,
     ).select("query_id", "neighbor_id")
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        l2_norm_col(vec_col).alias("q_norm"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm_col(vec_col).alias("c_norm"),
-    )
-    scored = (
-        short.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_score_col(
-                "q_vec", "c_vec", "q_norm", "c_norm"
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
+    q = _side(queries, "q", id_col=id_col, vec_col=vec_col)
+    c = _side(corpus, "c", id_col=id_col, vec_col=vec_col)
+    pairs = short.join(F.broadcast(q), "query_id").join(c, "neighbor_id")
+    return _cosine_topk(pairs, k)
 
 
 def ivfpq_topk(
@@ -1301,31 +1258,14 @@ def ivfpq_topk(
     enc = pq_encode(corpus, codebooks, id_col, vec_col, m, dsub).select(
         F.col(id_col).alias("neighbor_id"), "su", "code"
     )
-    qsub = subvectors(queries, id_col, vec_col, m, dsub).select(
-        F.col(id_col).alias("query_id"), "su", F.col("svec").alias("qvec")
-    )
-    dtable = qsub.join(F.broadcast(codebooks), "su").select(
-        "query_id",
-        "su",
-        "code",
-        F.floor(sq_l2(F.col("qvec"), F.col("cvec")) * F.lit(1000000.0))
-        .cast("bigint")
-        .alias("pd_micro"),
-    )
+    dtable = _adc_table(queries, codebooks, id_col, vec_col, m, dsub)
     adc = (
         cand.join(enc, "neighbor_id")
         .join(F.broadcast(dtable), ["query_id", "su", "code"])
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("pd_micro").alias("adc_micro"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_micro"), F.asc("neighbor_id")
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "adc_micro")
-    )
+    return _topk(adc, k, F.asc("adc_micro"), "adc_micro")
 
 
 def sql_pq_enc_dt(n_queries: int, dsub: int = PQ_DSUB) -> str:

@@ -335,23 +335,36 @@ def layout_zorder_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pure integer bit arithmetic (shift/and/or) on both engines; the
     observed-cell list comes from one distinct over the arrival
     projection."""
+    return zorder_index(_observed_cells(spark, sf_dir))
+
+
+def _observed_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(cell, x_idx, y_idx): every grid cell observed in the arrival
+    stream, the row-major cell id de-interleaved back to its grid
+    coordinates. One distinct over the arrival projection."""
     cells = taxi_apps.arrival_events(
         synthetic_taxi_rides(spark, sf_dir)
     ).select("cell").distinct()
     x = F.col("cell") % F.lit(geo.CELL_CNT_X)
     y = (F.col("cell") - x) / F.lit(geo.CELL_CNT_X)
-    out = cells.select(
+    return cells.select(
         "cell",
         x.cast("int").alias("x_idx"),
         y.cast("int").alias("y_idx"),
     )
-    z = F.lit(0).cast("bigint")
-    for b in range(_Z_BITS):
-        z = z + (
-            F.shiftleft(F.shiftright(F.col("x_idx"), b) % 2, 2 * b)
-            + F.shiftleft(F.shiftright(F.col("y_idx"), b) % 2, 2 * b + 1)
-        ).cast("bigint")
-    return out.withColumn("z_value", z)
+
+
+# Oracle twin of _observed_cells: CTEs ending in ``xy`` (cell, x_idx,
+# y_idx), embedded after WITH by every layout query's oracle.
+_XY_CTES = f"""{taxi_apps._arrivals_cte(_RIDES_SQL)},
+    cells AS (SELECT DISTINCT cell FROM arrivals),
+    xy AS (
+        SELECT cell,
+               CAST(cell % {geo.CELL_CNT_X} AS INT) AS x_idx,
+               CAST((cell - cell % {geo.CELL_CNT_X}) / {geo.CELL_CNT_X}
+                    AS INT) AS y_idx
+        FROM cells
+    )"""
 
 
 def _sql_zorder(xcol: str, ycol: str) -> str:
@@ -366,15 +379,7 @@ register(
     "layout_zorder_cells",
     layout_zorder_cells,
     f"""
-    {taxi_apps._arrivals_cte(_RIDES_SQL)},
-    cells AS (SELECT DISTINCT cell FROM arrivals),
-    xy AS (
-        SELECT cell,
-               CAST(cell % {geo.CELL_CNT_X} AS INT) AS x_idx,
-               CAST((cell - cell % {geo.CELL_CNT_X}) / {geo.CELL_CNT_X}
-                    AS INT) AS y_idx
-        FROM cells
-    )
+    {_XY_CTES}
     SELECT cell, x_idx, y_idx, {_sql_zorder('x_idx', 'y_idx')} AS z_value
     FROM xy
     """,
@@ -450,32 +455,14 @@ def layout_hilbert_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     h-ranges than z-ranges (no power-of-two seam jumps). Same observed-
     cell distinct as the z-order query; the index itself is pure
     integer expressions (hilbert_index)."""
-    cells = taxi_apps.arrival_events(
-        synthetic_taxi_rides(spark, sf_dir)
-    ).select("cell").distinct()
-    x = F.col("cell") % F.lit(geo.CELL_CNT_X)
-    y = (F.col("cell") - x) / F.lit(geo.CELL_CNT_X)
-    out = cells.select(
-        "cell",
-        x.cast("int").alias("x_idx"),
-        y.cast("int").alias("y_idx"),
-    )
-    return hilbert_index(out)
+    return hilbert_index(_observed_cells(spark, sf_dir))
 
 
 register(
     "layout_hilbert_cells",
     layout_hilbert_cells,
     f"""
-    {taxi_apps._arrivals_cte(_RIDES_SQL)},
-    cells AS (SELECT DISTINCT cell FROM arrivals),
-    xy AS (
-        SELECT cell,
-               CAST(cell % {geo.CELL_CNT_X} AS INT) AS x_idx,
-               CAST((cell - cell % {geo.CELL_CNT_X}) / {geo.CELL_CNT_X}
-                    AS INT) AS y_idx
-        FROM cells
-    ),
+    {_XY_CTES},
     {_sql_hilbert()}
     SELECT cell, x_idx, y_idx, hd AS h_value
     FROM h{_Z_BITS}
@@ -484,10 +471,9 @@ register(
 
 
 def zorder_index(df: DataFrame, bits: int = _Z_BITS) -> DataFrame:
-    """Append ``z_value``: the Morton interleave of (x_idx, y_idx) —
-    the same bit expression layout_zorder_cells inlines, packaged as a
-    composable helper for queries that need several layout keys side by
-    side."""
+    """Append ``z_value``: the Morton interleave of (x_idx, y_idx),
+    composable with hilbert_index for queries that need several layout
+    keys side by side."""
     z = F.lit(0).cast("bigint")
     for b in range(bits):
         z = z + (
@@ -522,17 +508,7 @@ def layout_skipping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-layout ROW_NUMBER partitions by layout, so no global single-
     partition window over big data — at 100 TB the cell universe is
     bounded by the grid (100k), not the input."""
-    cells = taxi_apps.arrival_events(
-        synthetic_taxi_rides(spark, sf_dir)
-    ).select("cell").distinct()
-    x = F.col("cell") % F.lit(geo.CELL_CNT_X)
-    y = (F.col("cell") - x) / F.lit(geo.CELL_CNT_X)
-    xy = cells.select(
-        "cell",
-        x.cast("int").alias("x_idx"),
-        y.cast("int").alias("y_idx"),
-    )
-    keyed = hilbert_index(zorder_index(xy))
+    keyed = hilbert_index(zorder_index(_observed_cells(spark, sf_dir)))
     melted = keyed.select(
         "x_idx",
         "y_idx",
@@ -606,15 +582,7 @@ register(
     "layout_skipping_stats",
     layout_skipping_stats,
     f"""
-    {taxi_apps._arrivals_cte(_RIDES_SQL)},
-    cells AS (SELECT DISTINCT cell FROM arrivals),
-    xy AS (
-        SELECT cell,
-               CAST(cell % {geo.CELL_CNT_X} AS INT) AS x_idx,
-               CAST((cell - cell % {geo.CELL_CNT_X}) / {geo.CELL_CNT_X}
-                    AS INT) AS y_idx
-        FROM cells
-    ),
+    {_XY_CTES},
     {_sql_hilbert()},
     keyed AS (
         SELECT xy.cell, xy.x_idx, xy.y_idx,

@@ -2409,40 +2409,6 @@ register(
 # shares boilerplate 8-grams across docs; no planting needed).
 
 
-def _ngram_rows(docs: DataFrame, n: int) -> DataFrame:
-    """(doc_id, s, gram): 1-based start position and space-joined token
-    n-gram per document — value-identical to posexploding
-    ``_guarded_ngrams`` (tested), produced by an Arrow-batched pass.
-    Catalyst evaluates the transform/slice/concat_ws lambda chain
-    interpreted (no codegen inside lambda scopes), which made the gram
-    explode the dominant cost of strip_dup_spans (2.4 s of its 4.6 s
-    warm wall at sf0.1 for ONE derivation); the Python join-of-slices
-    form is ~10x faster and has the same map-only shape. Docs shorter
-    than n tokens emit nothing, exactly like the expression guard."""
-    import pandas as pd
-
-    def gen(batches):
-        for pdf in batches:
-            ids: list = []
-            ss: list = []
-            gs: list = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if text is None:
-                    continue
-                grams = TX.py_token_grams(text, n)
-                if not grams:
-                    continue
-                ids.extend([doc_id] * len(grams))
-                ss.extend(range(1, len(grams) + 1))
-                gs.extend(grams)
-            yield pd.DataFrame({"doc_id": ids, "s": ss, "gram": gs})
-
-    id_type = dict(docs.dtypes)["doc_id"]
-    return docs.select("doc_id", "text").mapInPandas(
-        gen, schema=f"doc_id {id_type}, s int, gram string"
-    )
-
-
 def strip_dup_spans(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     """Per document: count and strip maximal cross-document duplicated
     token spans.
@@ -2467,7 +2433,7 @@ def strip_dup_spans(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     token-sized gram rows are cut lazily so dup detection and the
     coverage join share one derivation.
     """
-    doc_grams = _ngram_rows(docs, n).localCheckpoint(eager=False)
+    doc_grams = dedup._token_gram_rows(docs, n).localCheckpoint(eager=False)
     # Grams occurring in >= 2 distinct docs (two-level agg: partial
     # (gram, doc) distinct-ing, then gram-level doc count).
     dup_grams = (
@@ -2488,74 +2454,13 @@ def strip_dup_spans(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
         "doc_id", "text", "starts"
     )
 
-    def finish(batches):
-        import hashlib
-
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            recs = []
-            for doc_id, text, starts in zip(
-                pdf["doc_id"], pdf["text"], pdf["starts"]
-            ):
-                if text is None:
-                    # Oracle-pinned null-text behavior: n_tokens NULL
-                    # (len of a null token array), zero duplicated
-                    # tokens/spans (COALESCE over the missing agg rows),
-                    # hash of the empty residue. The expression form's
-                    # non-ANSI size(NULL) = -1 was NOT parity-safe here.
-                    recs.append(
-                        (
-                            doc_id,
-                            None,
-                            0,
-                            0,
-                            hashlib.md5(b"").hexdigest(),
-                        )
-                    )
-                    continue
-                toks = text.split(" ")
-                nt = len(toks)
-                cov = np.zeros(nt + 2, dtype=np.int32)
-                if starts is not None and len(starts):
-                    st = np.asarray(starts, dtype=np.int64)
-                    np.add.at(cov, st, 1)
-                    np.add.at(cov, np.minimum(st + n, nt + 1), -1)
-                covered = np.cumsum(cov[: nt + 1])[1:] > 0
-                n_dup = int(covered.sum())
-                prev = np.concatenate(([False], covered[:-1]))
-                n_spans = int((covered & ~prev).sum())
-                kept = " ".join(
-                    t for t, c in zip(toks, covered) if not c
-                )
-                recs.append(
-                    (
-                        doc_id,
-                        nt,
-                        n_dup,
-                        n_spans,
-                        hashlib.md5(kept.encode("utf-8")).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "doc_id",
-                    "n_tokens",
-                    "dup_token_count",
-                    "n_spans",
-                    "kept_hash",
-                ],
-            )
-
-    id_type = dict(docs.dtypes)["doc_id"]
-    return joined.mapInPandas(
-        finish,
-        schema=(
-            f"doc_id {id_type}, n_tokens int, dup_token_count int, "
-            "n_spans int, kept_hash string"
-        ),
+    # a duplicated-window start s covers the tokens [s, s + n - 1]
+    return dedup._strip_covered(
+        joined,
+        "doc_id",
+        "text",
+        "starts",
+        lambda starts: (starts, [s + n - 1 for s in starts]),
     )
 
 

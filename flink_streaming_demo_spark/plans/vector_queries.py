@@ -1511,58 +1511,7 @@ def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     would. Composes the two registered pipelines; the oracle composes
     their registered SQL verbatim (registry.ORACLE_SQL), so both sides
     stay definitionally in sync with the queries they grade."""
-    # exact feeds BOTH the hits join and the per-query totals: the cut
-    # (k x |Q| rows) stops the full brute-force top-k subtree from
-    # executing once per consumer (r15).
-    exact = (
-        sim_topk_cosine(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=False)
-    )
-    approx = sim_ann_lsh(spark, sf_dir).select("query_id", "neighbor_id")
-    hits = exact.join(approx, ["query_id", "neighbor_id"]).groupBy(
-        "query_id"
-    ).agg(F.count(F.lit(1)).alias("n_hits"))
-    return (
-        exact.groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_exact"))
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("n_hits", F.lit(0)).cast("bigint").alias("n_hits"),
-            F.round(
-                F.coalesce("n_hits", F.lit(0)).cast("double")
-                / F.col("n_exact").cast("double"),
-                6,
-            ).alias("recall"),
-        )
-    )
-
-
-def _ann_recall_oracle() -> str:
-    from flink_streaming_demo_spark.plans.registry import ORACLE_SQL
-
-    return f"""
-    WITH exact_q AS ({ORACLE_SQL["sim_topk_cosine"]}),
-    approx_q AS ({ORACLE_SQL["sim_ann_lsh"]}),
-    hits AS (
-        SELECT e.query_id, COUNT(*) AS n_hits
-        FROM exact_q e
-        JOIN approx_q a
-          ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-        GROUP BY e.query_id
-    )
-    SELECT e.query_id,
-           CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-           ROUND(CAST(COALESCE(h.n_hits, 0) AS DOUBLE)
-                 / CAST(COUNT(*) AS DOUBLE), 6) AS recall
-    FROM exact_q e
-    LEFT JOIN hits h ON h.query_id = e.query_id
-    GROUP BY e.query_id, h.n_hits
-    """
-
-
-register("sim_ann_recall", sim_ann_recall, _ann_recall_oracle())
+    return _recall_vs_exact(spark, sf_dir, "sim_ann_lsh")
 
 
 def sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1571,16 +1520,30 @@ def sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the trained-index tier, so BOTH approximate tiers carry a
     driver-checked quality grade (an IVF recall drop from a k-means
     seeding or nprobe-selection change fails the driver like a wrong
-    join would). Composes the two registered pipelines; the oracle
-    composes their registered SQL verbatim."""
-    # same two-consumer cut as sim_ann_recall (r15)
+    join would)."""
+    return _recall_vs_exact(spark, sf_dir, "sim_ivf_topk")
+
+
+def _recall_vs_exact(
+    spark: SparkSession, sf_dir: str, approx: str
+) -> DataFrame:
+    """(query_id, n_hits, recall): per query, the share of the exact
+    brute-force top-k that the registered approximate query ``approx``
+    also returns."""
+    from flink_streaming_demo_spark.plans.registry import QUERIES
+
+    # exact feeds BOTH the hits join and the per-query totals: the cut
+    # (k x |Q| rows) stops the full brute-force top-k subtree from
+    # executing once per consumer (r15).
     exact = (
         sim_topk_cosine(spark, sf_dir)
         .select("query_id", "neighbor_id")
         .localCheckpoint(eager=False)
     )
-    approx = sim_ivf_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    hits = exact.join(approx, ["query_id", "neighbor_id"]).groupBy(
+    approx_df = QUERIES[approx](spark, sf_dir).select(
+        "query_id", "neighbor_id"
+    )
+    hits = exact.join(approx_df, ["query_id", "neighbor_id"]).groupBy(
         "query_id"
     ).agg(F.count(F.lit(1)).alias("n_hits"))
     return (
@@ -1599,12 +1562,14 @@ def sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_recall_oracle() -> str:
+def _recall_oracle(approx: str) -> str:
+    """DuckDB twin of ``_recall_vs_exact``, composing the registered
+    oracle SQL of sim_topk_cosine and of ``approx`` verbatim."""
     from flink_streaming_demo_spark.plans.registry import ORACLE_SQL
 
     return f"""
     WITH exact_q AS ({ORACLE_SQL["sim_topk_cosine"]}),
-    approx_q AS ({ORACLE_SQL["sim_ivf_topk"]}),
+    approx_q AS ({ORACLE_SQL[approx]}),
     hits AS (
         SELECT e.query_id, COUNT(*) AS n_hits
         FROM exact_q e
@@ -1622,7 +1587,8 @@ def _ivf_recall_oracle() -> str:
     """
 
 
-register("sim_ivf_recall", sim_ivf_recall, _ivf_recall_oracle())
+register("sim_ann_recall", sim_ann_recall, _recall_oracle("sim_ann_lsh"))
+register("sim_ivf_recall", sim_ivf_recall, _recall_oracle("sim_ivf_topk"))
 
 
 MULTIPROBE_MAX = 4

@@ -1237,19 +1237,14 @@ def ivf_topk_view(
     # below is the view's first action and materializes the assignment
     # there; the ranked read then reuses the cache — one assignment
     # pass either way, one fewer job per view build.
-    qry = SIM.assign_to_centroids(queries, centroids, nprobe).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_vec"),
-        F.col("nrm").alias("q_norm"),
-        "centroid_id",
+    qry = SIM._ivf_side(
+        queries, centroids, nprobe, "q", "vec_id", "embedding"
     ).localCheckpoint(eager=False)
     if not os.path.exists(cells_sink.path):
         # typed-empty corpus derived from the query frame's own dtypes
-        corp = qry.select(
-            F.col("query_id").alias("neighbor_id"),
-            F.col("q_vec").alias("c_vec"),
-            F.col("q_norm").alias("c_norm"),
-            "centroid_id",
+        corp = SIM._side(
+            qry, "c", "centroid_id",
+            id_col="query_id", vec_col="q_vec", norm="q_norm",
         ).filter(F.lit(False))
         return SIM.ivf_rank(qry, corp, k)
     cells = sorted(
@@ -1261,15 +1256,9 @@ def ivf_topk_view(
     probe_pred = (
         F.col("centroid_id").isin(cells) if cells else F.lit(False)
     )
-    corp = (
-        cells_sink.read(spark)
-        .filter(probe_pred)
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("c_vec"),
-            F.col("nrm").alias("c_norm"),
-            "centroid_id",
-        )
+    corp = SIM._side(
+        cells_sink.read(spark).filter(probe_pred), "c", "centroid_id",
+        norm="nrm",
     )
     return SIM.ivf_rank(qry, corp, k)
 

@@ -170,3 +170,34 @@ def test_import_closure_stops_at_the_registry(tmp_path):
         "flink_streaming_demo_spark/plans/helper.py",
         "flink_streaming_demo_spark/plans/__init__.py",
     }
+
+
+def test_coverage_tool_outside_a_git_work_tree_exits_2(tmp_path):
+    """A `git archive` copy has no .git: the tool must say in one line
+    that it needs a git work tree and exit 2, not die on `git diff`."""
+    import glob
+    import os
+    import shutil
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    copy = tmp_path / "copy"
+    ignore = shutil.ignore_patterns("__pycache__")
+    for d in ("tools", "flink_streaming_demo_spark"):
+        shutil.copytree(os.path.join(repo, d), copy / d, ignore=ignore)
+    for f in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")) + [
+        os.path.join(repo, "parity_ledger.json")
+    ]:
+        shutil.copy(f, copy)
+    # stop git's upward search at tmp_path, so no enclosing work tree
+    # can stand in for the missing one
+    env = dict(os.environ, GIT_CEILING_DIRECTORIES=str(tmp_path))
+    for args in ([], ["--assert-reproven"]):
+        out = subprocess.run(
+            [sys.executable, "tools/coverage.py", *args],
+            cwd=copy, env=env, capture_output=True, text=True, timeout=300,
+        )
+        lines = (out.stdout + out.stderr).strip().splitlines()
+        assert out.returncode == 2, lines[-5:]
+        assert len(lines) == 1 and "git work tree" in lines[0], lines[-5:]

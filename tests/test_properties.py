@@ -752,13 +752,14 @@ def test_vectorized_gram_twins_match_expression_forms(spark, texts):
     """The Arrow extraction twins must match their expression forms on
     ADVERSARIAL text — consecutive/leading/trailing spaces (empty
     tokens), unicode, empty strings — not just the single-space corpus:
-    shingle_rows vs explode(shingles), _ngram_rows vs posexplode
+    shingle_rows vs explode(shingles), _token_gram_rows vs posexplode
     (_guarded_ngrams), winnow_fingerprint_stats vs winnow_fingerprints.
     This pins py_token_grams' split(' ') convention (keep empties,
     UTF-8 hashing) against Spark's split semantics."""
     from flink_streaming_demo_spark.functions import text as TX
     from flink_streaming_demo_spark.operators.dedup import (
         SHINGLE_N,
+        _token_gram_rows,
         shingle_rows,
         shingles,
         tokens,
@@ -766,7 +767,6 @@ def test_vectorized_gram_twins_match_expression_forms(spark, texts):
     from flink_streaming_demo_spark.plans.text_queries import (
         SPAN_N,
         _guarded_ngrams,
-        _ngram_rows,
     )
 
     rows = [(i, t) for i, t in enumerate(texts)]
@@ -789,7 +789,7 @@ def test_vectorized_gram_twins_match_expression_forms(spark, texts):
             "pos0", "gram"
         ),
     ).select("doc_id", (F.col("pos0") + 1).alias("s"), "gram")
-    new_ng = _ngram_rows(df, SPAN_N)
+    new_ng = _token_gram_rows(df, SPAN_N)
     assert old_ng.exceptAll(new_ng).count() == 0
     assert new_ng.exceptAll(old_ng).count() == 0
 

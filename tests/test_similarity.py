@@ -529,3 +529,56 @@ def test_multiprobe_recall_monotone_in_nprobe(spark, sf_dir):
     assert rows[levels[-1]].recall >= rows[levels[0]].recall
     for r in rows.values():
         assert 0.0 <= r.recall <= 1.0
+
+
+def test_rankers_break_score_ties_on_ascending_neighbor_id(spark):
+    """Every dense ranker shares one top-k tail: tied scores rank by
+    ascending neighbor_id, and ranks run 1..k with no gaps. The corpus
+    holds each of four base vectors ten times (ids i, i+4, ..., i+36),
+    shuffled, so every query's duplicates tie at cosine 1.0 and more of
+    them tie than k keeps."""
+    import random
+
+    dims = 64
+    base = [
+        [math.cos(0.7 * b + 0.13 * i) for i in range(dims)] for b in range(4)
+    ]
+    ids = list(range(40))
+    random.Random(7).shuffle(ids)
+    corpus = spark.createDataFrame(
+        [(i, base[i % 4], (i // 4) % 2) for i in ids],
+        "vec_id long, embedding array<float>, label int",
+    )
+    queries = corpus.filter("vec_id < 4")
+    centroids = corpus.filter("vec_id < 4").select(
+        F.col("vec_id").alias("centroid_id"), "embedding"
+    )
+    k = 3
+
+    def dups(q, label=None):
+        return [
+            i for i in range(q % 4, 40, 4)
+            if i != q and (label is None or (i // 4) % 2 != label)
+        ][:k]
+
+    rankers = {
+        "brute_force_topk": SIM.brute_force_topk(queries, corpus, k=k),
+        "lsh_bucketed_topk": SIM.lsh_bucketed_topk(queries, corpus, k=k),
+        "ivf_topk": SIM.ivf_topk(queries, corpus, centroids, k=k),
+        "pq_shortlist_rerank": SIM.pq_shortlist_rerank(
+            queries, corpus, SIM.pq_train(corpus), k=k, shortlist=40
+        ),
+        "hard_negatives": SIM.hard_negatives(queries, corpus, k=k),
+    }
+    for name, df in rankers.items():
+        got: dict[int, list] = {}
+        for r in df.collect():
+            got.setdefault(r.query_id, []).append(r)
+        assert sorted(got) == [0, 1, 2, 3], name
+        for q, rows in got.items():
+            rows.sort(key=lambda r: r.rank)
+            assert [r.rank for r in rows] == list(range(1, k + 1)), name
+            assert all(r.score == 1.0 for r in rows), (name, rows)
+            label = 0 if name == "hard_negatives" else None
+            want = dups(q, label)
+            assert [r.neighbor_id for r in rows] == want, (name, q, rows)

@@ -635,10 +635,10 @@ def test_ngram_rows_equals_guarded_ngram_explode(spark, sf_dir):
     posexploding _guarded_ngrams (1-based starts included)."""
     from pyspark.sql import functions as F
 
+    from flink_streaming_demo_spark.operators.dedup import _token_gram_rows
     from flink_streaming_demo_spark.plans.text_queries import (
         SPAN_N,
         _guarded_ngrams,
-        _ngram_rows,
     )
     from flink_streaming_demo_spark.schemas import load_table
 
@@ -649,7 +649,7 @@ def test_ngram_rows_equals_guarded_ngram_explode(spark, sf_dir):
             "pos0", "gram"
         ),
     ).select("doc_id", (F.col("pos0") + 1).alias("s"), "gram")
-    new = _ngram_rows(docs, SPAN_N)
+    new = _token_gram_rows(docs, SPAN_N)
     assert old.exceptAll(new).count() == 0
     assert new.exceptAll(old).count() == 0
 

@@ -12,7 +12,10 @@ operators/ and functions/ helpers count, not just the plans module)
 differs from the commit that recorded that round's CORRECTNESS file,
 per ``git diff`` against the working tree.
 
-Usage: python tools/coverage.py
+Usage: python tools/coverage.py [--assert-reproven] [--suggest-window]
+
+It needs a git work tree (a clone or a ``git worktree``); elsewhere it
+prints one line saying so and exits 2.
 """
 
 from __future__ import annotations
@@ -262,8 +265,29 @@ def round_commit(repo: str, rnd: int) -> str:
     return out or "HEAD"
 
 
+def in_git_work_tree(repo: str) -> bool:
+    """True when ``repo`` is the top of a git work tree (a clone or a
+    ``git worktree``). A ``git archive`` copy is not: there every
+    ``git diff`` exits 129, and a copy nested in some other work tree
+    would diff against that tree's history instead."""
+    out = subprocess.run(
+        ["git", "rev-parse", "--show-toplevel"],
+        cwd=repo, capture_output=True, text=True,
+    )
+    return out.returncode == 0 and os.path.realpath(
+        out.stdout.strip()
+    ) == os.path.realpath(repo)
+
+
 def main() -> int:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if not in_git_work_tree(repo):
+        print(
+            f"tools/coverage.py: {repo} is not a git work tree; run it "
+            "in a clone or a `git worktree` checkout",
+            file=sys.stderr,
+        )
+        return 2
     from flink_streaming_demo_spark.plans.registry import ORACLE_SQL, QUERIES
 
     latest: dict[str, tuple[int, dict]] = {}
