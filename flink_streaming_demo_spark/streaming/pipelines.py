@@ -454,11 +454,10 @@ def _streaming_sketch_maintenance(
         # batch partials still feed both the touched-groups probe and
         # the merge exactly once (checkpoint cache), but materialize
         # inside the sink's own first action instead of as a separate
-        # job per micro-batch. Ordering is safe by the crossdoc-gate
-        # argument: every read of the store (``cur``) executes inside
-        # the sink's pre-write jobs (bucket collect + merge
-        # checkpoint), which complete before the dynamic overwrite
-        # rewrites the parquet they read.
+        # job per micro-batch. Ordering is safe: every read of the
+        # store (``cur``) executes inside the sink's door cut, which
+        # completes before the dynamic overwrite rewrites the parquet
+        # it read.
         part = partial_fn(batch_df).localCheckpoint(eager=False)
         if os.path.exists(sink.path):
             touched = part.select(*group_cols).distinct()
@@ -846,11 +845,10 @@ def streaming_lateness_monitor(sink, late_dir: str | None = None):
         # Lazy checkpoints (r16, guide §2.6 / VERDICT r15 #4): ``late``
         # feeds the side output and the profile exactly once via the
         # checkpoint cache; the profile partials materialize inside the
-        # sink's own pre-write jobs. Store-read-before-write ordering
-        # is the crossdoc-gate argument: ``cur`` executes inside the
-        # sink's bucket collect + merge checkpoint, both before the
-        # overwrite (and the prior watermark was already fetched into
-        # ``wm_us`` as a Python scalar above).
+        # sink's door cut. Store-read-before-write ordering: ``cur``
+        # executes inside that cut, before the overwrite (and the prior
+        # watermark was already fetched into ``wm_us`` as a Python
+        # scalar above).
         late = L.lateness_vs_fixed_watermark(ev, wm_us).localCheckpoint(
             eager=False
         )
@@ -1325,13 +1323,11 @@ def streaming_ivf_dedup_gate(
             batch_df, store, cent, threshold, assigned=assigned
         )
         # decisions must be materialized BEFORE the store merge mutates
-        # the parquet they are derived from; the lazy checkpoint keeps
-        # that ordering (it materializes inside the decisions-store
-        # write, which runs before the cells merge) without the eager
-        # form's separate materialization job per batch (r15).
-        decisions_sink.foreach_batch(
-            decisions.localCheckpoint(eager=False), epoch_id
-        )
+        # the parquet they are derived from: every upsert sink executes
+        # its input once, inside its own foreach_batch (the parquet
+        # sink's door cut, the other sinks' collect), so the decisions
+        # are read before the cells merge starts.
+        decisions_sink.foreach_batch(decisions, epoch_id)
         cells_sink.foreach_batch(assigned, epoch_id)
 
     return _nonempty_batches(body)
@@ -1441,13 +1437,11 @@ def streaming_crossdoc_dedup_gate(
             base_docs, base_fps, batch, incoming_fps=inc_fps
         )
         # decisions must be materialized BEFORE the store merges mutate
-        # the parquet they are derived from; the lazy checkpoint keeps
-        # that ordering (it materializes inside the decisions-store
-        # write, which runs before either merge) without the eager
-        # form's separate materialization job per batch (r15).
-        decisions_sink.foreach_batch(
-            decisions.localCheckpoint(eager=False), epoch_id
-        )
+        # the parquet they are derived from: every upsert sink executes
+        # its input once, inside its own foreach_batch (the parquet
+        # sink's door cut, the other sinks' collect), so the decisions
+        # are read before either merge starts.
+        decisions_sink.foreach_batch(decisions, epoch_id)
         # The two ingest merges touch disjoint stores and read only
         # checkpointed inputs (inc_fps / batch), so they are independent
         # once the decisions write above has materialized the gate —

@@ -18,10 +18,12 @@ Three implementations:
   MERGE-capable backend" note below, honest about its driver-resident
   scale class (decision/checkpoint/config tables).
 * ``ParquetUpsertSink`` — keyed merge into a hash-bucket-partitioned
-  parquet table, 8 buckets by default. Each micro-batch rewrites ONLY the
-  bucket partitions that contain batch keys (dynamic partition
-  overwrite), as one file per touched bucket, so merge cost is
-  O(touched buckets), not O(table) — the jar-free shape of a Delta/Iceberg
+  parquet table, 8 buckets by default. The sink runs each micro-batch's
+  plan exactly once: its first action is an eager cut of the batch that
+  also observes which buckets the batch touches. Each micro-batch then
+  rewrites ONLY those bucket partitions (dynamic partition overwrite),
+  as one file per touched bucket, so merge cost is O(touched buckets),
+  not O(table) — the jar-free shape of a Delta/Iceberg
   ``MERGE INTO``; at production scale the same ``foreachBatch`` body
   targets a real MERGE-capable store (or an OpenSearch bulk-upsert
   client) — the sink interface is the contract, the store is pluggable.
@@ -52,7 +54,7 @@ import json
 import os
 import threading
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 #: partition column for the bucketed parquet store (never exposed to readers)
 BUCKET_COL = "__kb"
@@ -118,11 +120,14 @@ class ParquetUpsertSink:
     Layout: ``path/__kb=<bucket>/part-*.parquet`` with
     ``bucket = pmod(hash(key_cols), n_buckets)``. A micro-batch merge:
 
-    1. reduce the batch to one (latest) row per key,
-    2. read ONLY the bucket partitions the batch touches (partition-pruned
+    1. cut the batch (eager ``localCheckpoint``) and, in the same job,
+       observe the set of buckets it touches; an empty batch stops here,
+       and every later step reads the cut, so the batch's plan runs once,
+    2. reduce the batch to one (latest) row per key,
+    3. read ONLY the bucket partitions the batch touches (partition-pruned
        scan — untouched buckets are never read),
-    3. anti-join out superseded old rows, union the fresh rows,
-    4. dynamic-partition-overwrite: only the touched ``__kb=`` directories
+    4. anti-join out superseded old rows, union the fresh rows,
+    5. dynamic-partition-overwrite: only the touched ``__kb=`` directories
        are replaced; every other partition's files are left byte-identical.
 
     Each merge clusters the merged rows by bucket, so every touched bucket
@@ -151,13 +156,6 @@ class ParquetUpsertSink:
         self.key_cols = list(key_cols)
         self.order_col = order_col
         self.n_buckets = int(n_buckets)
-
-    def _bucketed(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            BUCKET_COL,
-            F.pmod(F.hash(*[F.col(k) for k in self.key_cols]),
-                   F.lit(self.n_buckets)),
-        )
 
     # metadata file name; leading underscore keeps it out of parquet scans
     META_FILE = "_upsert_meta.json"
@@ -229,20 +227,30 @@ class ParquetUpsertSink:
 
     def foreach_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        fresh = self._bucketed(
-            latest_per_key(batch_df, self.key_cols, self.order_col)
+        # The door cut: the sink's one action on the incoming frame runs
+        # its plan (a micro-batch's stateful plan, in a stream) exactly
+        # once and observes the touched buckets on the way; everything
+        # below reads ``batch``, never ``batch_df``. A re-run would
+        # re-commit the state store and re-count its metrics. An empty
+        # batch returns here, even the first one: a partitioned write of
+        # an empty frame emits no part files. LOCAL-MODE ASSUMPTION, as
+        # for the merge cut below: the cut's blocks live in executor
+        # block managers, so on a cluster an executor lost before the
+        # write fails the micro-batch, and only a restart replays it.
+        bucket = F.pmod(
+            F.hash(*[F.col(k) for k in self.key_cols]), F.lit(self.n_buckets)
         )
-        # One small driver fetch (≤ n_buckets rows) in EVERY branch: an
-        # empty batch must short-circuit even on the first micro-batch — a
-        # partitioned write of an empty frame emits no part files, and the
-        # staging re-read would fail on schema inference.
-        touched = [
-            r[0] for r in fresh.select(BUCKET_COL).distinct().collect()
-        ]
+        obs = Observation()
+        batch = batch_df.observe(
+            obs, F.collect_set(bucket).alias("b")
+        ).localCheckpoint()
+        touched = list(obs.get["b"] or [])
         if not touched:
             return
-        exists = os.path.exists(self.path)
-        if not exists:
+        fresh = latest_per_key(
+            batch, self.key_cols, self.order_col
+        ).withColumn(BUCKET_COL, bucket)
+        if not os.path.exists(self.path):
             # First write: nothing reads the path, no merge — write the
             # fresh rows straight in (r15: the staging round-trip below
             # is pure overhead here).
@@ -256,9 +264,7 @@ class ParquetUpsertSink:
             F.col(BUCKET_COL).isin(touched)
         )
         keep = old.join(
-            fresh.select(*self.key_cols).distinct(),
-            on=self.key_cols,
-            how="left_anti",
+            batch.select(*self.key_cols), on=self.key_cols, how="left_anti"
         )
         # Materialize the merged (touched-buckets-only) rows BEFORE the
         # overwrite: Spark refuses to overwrite a path its plan reads

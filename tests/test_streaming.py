@@ -464,6 +464,35 @@ def test_parquet_upsert_sink_empty_first_batch_is_noop(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+def test_parquet_upsert_sink_empty_batch_is_one_job(spark):
+    """The sink's door cut is its only action on an empty batch: one
+    Spark job, which both materializes the batch and observes its
+    (empty) set of touched buckets, and no store is created."""
+    import os
+
+    from flink_streaming_demo_spark.streaming.sinks import ParquetUpsertSink
+
+    sc = spark.sparkContext
+    d = tempfile.mkdtemp(prefix="upsert_")
+    path = d + "/kv"
+    empty = (
+        spark.range(64).filter(F.col("id") < 0)
+        .groupBy((F.col("id") % 4).alias("k")).count()
+    )
+    try:
+        sink = ParquetUpsertSink(path, ["k"])
+        sc.setJobGroup("upsert_empty_batch", "empty micro-batch")
+        try:
+            sink.foreach_batch(empty, 0)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup("upsert_empty_batch")
+        assert len(jobs) == 1
+        assert not os.path.exists(path)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
 def test_parquet_upsert_sink_rejects_incompatible_layout(spark):
     """Reusing a store with a different n_buckets would SILENTLY duplicate
     keys; an unbucketed table would fail confusingly mid-merge. Both must
@@ -1280,6 +1309,64 @@ def test_streaming_restart_from_checkpoint_equals_batch(spark, rides_df):
             for r in sliding_arrival_count(rides).collect()
         }
         assert got == want
+    finally:
+        shutil.rmtree(chunk_dir, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def test_upsert_sink_runs_each_micro_batch_once(spark, rides_df):
+    """App 2 in append mode into the parquet store: the sink runs each
+    micro-batch's stateful plan exactly once. Every run of that plan
+    re-applies the watermark eviction and re-counts it, so on every
+    trigger the state operator's ``numRowsRemoved`` (the windows closed)
+    must equal the rows the store gained, on the first write and on
+    every merge alike."""
+    import os
+
+    from flink_streaming_demo_spark.streaming.sinks import ParquetUpsertSink
+
+    jittered = replay.with_delivery_jitter(rides_df, max_delay_secs=60)
+    chunk_dir = replay.write_replay_chunks(
+        jittered, n_chunks=6, order_col="delivery_ts"
+    )
+    work = tempfile.mkdtemp(prefix="upsert_once_")
+    store = work + "/store"
+    sink = ParquetUpsertSink(store, ["cell", "window_end"])
+    stored = {}
+
+    def counted(batch_df, epoch_id):
+        sink.foreach_batch(batch_df, epoch_id)
+        stored[epoch_id] = (
+            sink.read(spark).count() if os.path.exists(store) else 0
+        )
+
+    try:
+        stream = replay.read_replay_stream(
+            spark, chunk_dir, RIDES_SCHEMA, max_files_per_trigger=1
+        )
+        q = (
+            streaming_sliding_arrival_count(
+                stream, watermark_delay="60 seconds"
+            )
+            .writeStream.outputMode("append")
+            .queryName("upsert_once")
+            .foreachBatch(counted)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        removed = {
+            p.batchId: p.stateOperators[0].numRowsRemoved
+            for p in q.recentProgress
+        }
+        gained = {
+            b: stored[b] - stored.get(b - 1, 0) for b in sorted(stored)
+        }
+        assert removed == gained
+        # a first write and at least two merges were checked
+        assert sum(1 for n in gained.values() if n > 0) >= 3
     finally:
         shutil.rmtree(chunk_dir, ignore_errors=True)
         shutil.rmtree(work, ignore_errors=True)
